@@ -3,9 +3,12 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** THE in-loop lineage cut for iterative fixpoints — every loop that
-  * checkpoints a frame it will reference next round routes through
-  * [[cut]] (connected components, kPeel, BFS, Bellman-Ford, BPE train;
-  * grep-gate: no raw `localCheckpoint` inside an iteration loop).
+  * carries a frame into its next round routes through [[cut]]
+  * (connected components, kPeel, BFS, Bellman-Ford, BPE train, and
+  * Graph's pageRank, personalizedPageRank, hits and labelPropagation).
+  * ScaleShapeSpec's "iterative graph ops keep O(1) plans per round"
+  * test checks that a 6-round plan stays within a constant of the
+  * 1-round plan for each graph loop.
   *
   * Two disciplines fused, so the next fixpoint someone adds cannot
   * reintroduce either failure mode:
@@ -31,13 +34,7 @@ import org.apache.spark.sql.DataFrame
   *      round 9). Single-reference chains only grow digits linearly in
   *      the round count, but the cap costs nothing there — uniformity is
   *      the point (CarriedStatsSpec pins both multiplicity classes at
-  *      depth ≥ 30).
-  *
-  * Persist-based rank loops (pageRank/HITS/PPR/labelPropagation) are a
-  * different discipline on purpose: they reference the previous frame
-  * ONCE per round against loop-invariant persisted relations, release
-  * the parent eagerly, and never checkpoint — no LogicalRDD, no carried
-  * stats, plan depth linear in the contractual round count. */
+  *      depth ≥ 30). */
 object Fixpoint {
 
   /** Truncate `df`'s lineage for the next iteration round: reliable

@@ -9,65 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** MEASURED, DEFERRED co-partition gate for the iterative operators
-    * (guide §2.4, round 15). Past the gate, the cached edge relation is
-    * re-laid-out by its per-iteration join key ONCE — hash-partition +
-    * sort + persist — so no remaining round's join re-shuffles or
-    * re-sorts it: the scale-defining fix for iterative joins where the
-    * rank/label side is too large to broadcast. Below the gate the
-    * re-layout is counter-productive and is skipped: AQE broadcasts the
-    * node-sized side and streams the edge list straight from cache, so
-    * a forced repartition+sort only adds an exchange, a sort and a
-    * wider cache (measured at sf0.1: pageRank rounds 1.1-2.0 s simple
-    * vs 1.5-3.3 s force-partitioned).
-    *
-    * HOW THE GATE MEASURES AT ZERO COST: the decision is deferred to
-    * just after round 1 — which materializes the persisted edge
-    * relation anyway — and the row count is read from the
-    * InMemoryRelation's accumulated statistics ([[materializedRows]]),
-    * never from an extra count() job (an up-front count was tried and
-    * measured +1-2 s per query at sf0.1; a plan-stats estimate gate was
-    * also tried and rejected — these edge lists sit above joins, whose
-    * size-only estimates are side PRODUCTS, TB-scale at sf0.1, so the
-    * estimate mis-fired on every registered caller).
-    * `spark.graft.graph.copartitionMinEdges` (default 2^21 directed
-    * rows ≈ the point where the node-sized rank relation stops fitting
-    * a broadcast; 0 forces the re-layout — the plan-evidence/spec
-    * switch) tunes it. */
-  private def copartitionMinEdges(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get("spark.graft.graph.copartitionMinEdges", (1L << 21).toString)
-      .toLong
-
-  /** Row count of a MATERIALIZED cached relation, read from the
-    * InMemoryRelation statistics the cache build accumulated — no job
-    * runs. None when the relation is not cached or not yet
-    * materialized; callers then keep the simple shape (always
-    * correct, just unoptimized past broadcast scale). */
-  private def materializedRows(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    df.where(lit(true)).queryExecution.optimizedPlan.collectFirst {
-      case r: InMemoryRelation => r.stats.rowCount.map(_.toLong)
-    }.flatten
-  }
-
-  private def shouldRelayout(cached: DataFrame): Boolean = {
-    val gate = copartitionMinEdges(cached)
-    gate == 0L || materializedRows(cached).exists(_ >= gate)
-  }
-
-  /** One-time re-layout of a materialized cached relation by the loop
-    * join key: one exchange + sort now, zero per-round exchanges and
-    * sorts for every remaining iteration. Replaces (and releases) the
-    * plain cache. */
-  private def relayout(cached: DataFrame, key: String): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val d = cached.repartition(col(key)).sortWithinPartitions(key)
-      .persist(lvl)
-    d.count()
-    cached.unpersist()
-    d
-  }
+  private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** PageRank in EXACT fixed-point arithmetic: ranks are integer
     * 1e-12 units (`rank_e12`), every step is integer division —
@@ -84,78 +26,64 @@ object Graph {
     * on src then dst; at 1000 executors both are plain key shuffles,
     * salted upstream if a hub key is pathological). The edge list,
     * degree relation, and the loop-invariant (node, total) base are
-    * computed once and PERSISTED; each new rank frame is persisted and
-    * the previous one released, so the lineage stays one-iteration
-    * deep (an unpersisted lazy unroll re-derives every prior round on
-    * each action — quadratic work and a stack hazard — and measured
-    * SLOWER even for 5 rounds here: AQE re-optimizes the ever-growing
-    * nested plan at every one of its stages). Nodes with no in-edges
-    * keep the teleport term only.
+    * computed once and PERSISTED until the loop ends; each new rank
+    * frame goes through [[Fixpoint.cut]], so a round's plan reads the
+    * previous round's materialized ranks and stays the same size every
+    * round (persisting each round instead would nest every earlier
+    * round's plan in the next; under AQE the executed plan doubles per
+    * round). Nodes with no in-edges keep the teleport term only.
+    * `iters = 0` returns the initial assignment, 10¹² div N per node.
     *
     * `edges` must be distinct (src, dst) pairs; nodes are whatever
     * appears in either column. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the raw edge projection feeds FOUR subtrees (both sides of the
-    // degree join, both arms of the node union) — persist it through
-    // the setup phase or an expensive upstream (a join + distinct in
-    // the registered callers) is recomputed once per subtree; released
-    // right after round 1 so its blocks don't pressure the later
-    // rounds' GC
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .persist(lvl)
-    // degree is folded into the edge list ONCE as a PARTITIONED window
-    // count (round 15; replaces the e ⋈ groupBy(e) self-join): one
-    // exchange and one scan of e instead of two scans + a join, and the
-    // result is hash-partitioned AND sorted by the per-round join key
-    // BY CONSTRUCTION at every scale — each iteration's rank ⋈ edges
-    // join reads it from cache with no exchange and no sort (guide
-    // §2.4: two operations keyed the same way share one exchange), so
-    // this relation needs no deferred re-layout
-    val eDeg = e
-      .withColumn("__deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__src")))
       .persist(lvl)
     val nodes = e.select(col("__src").as("node"))
       .union(e.select(col("__dst")))
       .distinct().persist(lvl)
-    // the (node, n) base for every round's left join is loop-invariant:
-    // join it with the 1-row total ONCE and persist, instead of
-    // re-broadcasting the total inside every iteration (5 extra
-    // broadcast jobs measured as pure overhead)
-    val nTotal = nodes.agg(count(lit(1)).as("__n"))
-    val nodesN = nodes.crossJoin(broadcast(nTotal)).persist(lvl)
-    val teleport = expr("150000000000L DIV __n")
-    var rank = nodesN
-      .select(col("node"), expr("1000000000000L DIV __n").as("rank_e12"))
+    rankLoop(e, nodes, count(lit(1)).as("__n"),
+      init = "1000000000000L DIV __n", teleport = "150000000000L DIV __n",
+      iters)
+  }
+
+  /** The pageRank / personalizedPageRank iteration over the persisted
+    * edge projection `e` (__src, __dst) and node set `nodes` (callers
+    * persist `e`: it feeds the degree window and both arms of the node
+    * union, and an expensive upstream would otherwise be recomputed
+    * once per consumer). `total` is the 1-row aggregate over `nodes`
+    * that `init` and `teleport` divide by; it is joined to the node set
+    * ONCE and persisted, never re-broadcast inside the loop. Degree is folded into the edge list
+    * once as a PARTITIONED window count: one exchange and one scan of
+    * `e`, and the result is hash-partitioned AND sorted by the
+    * per-round join key by construction, so each round's rank ⋈ edges
+    * join reads it from cache with no exchange and no sort (guide
+    * §2.4). Every persisted relation is released after the loop. */
+  private def rankLoop(e: DataFrame, nodes: DataFrame,
+                       total: org.apache.spark.sql.Column, init: String,
+                       teleport: String, iters: Int): DataFrame = {
+    val eDeg = e
+      .withColumn("__deg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("__src")))
       .persist(lvl)
-    for (i <- 1 to iters) {
+    val nodesN = nodes.crossJoin(broadcast(nodes.agg(total))).persist(lvl)
+    var rank = nodesN.select(col("node"), expr(init).as("rank_e12"))
+    for (_ <- 1 to iters) {
       val contribs = rank
         .join(eDeg, rank("node") === eDeg("__src"))
         .select(col("__dst").as("node"), expr("rank_e12 DIV __deg").as("__c"))
         .groupBy("node").agg(sum("__c").as("__in"))
-      val next = nodesN
+      rank = Fixpoint.cut(nodesN
         .join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (teleport + expr("85L * coalesce(__in, 0L) DIV 100")).as("rank_e12"))
-        .persist(lvl)
-      next.count() // materialize before releasing the parent
-      if (i == 1) {
-        // round 1 materialized every setup cache: release the raw edge
-        // projection and node set (their consumers are all cached)
-        e.unpersist()
-        nodes.unpersist()
-      }
-      rank.unpersist()
-      rank = next
+          (expr(teleport) + expr("85L * coalesce(__in, 0L) DIV 100"))
+            .as("rank_e12")))
     }
-    // the final rank is materialized; its inputs can go. The rank frame
-    // itself stays persisted for the caller's action (session cache
-    // hygiene — Verify/Bench clearCache — releases it after).
-    eDeg.unpersist()
-    nodesN.unpersist()
-    rank.select(col("node"), col("rank_e12"))
+    // every round's cut materialized its ranks; at iters = 0 the
+    // caller's action recomputes the initial assignment from `edges`
+    Seq(e, nodes, eDeg, nodesN).foreach(_.unpersist())
+    rank
   }
 
   /** HITS hubs-and-authorities in EXACT e6 fixed-point integers.
@@ -171,23 +99,16 @@ object Graph {
     * Scale shape per round: two edge-keyed join+aggregate passes (the
     * transposed propagation reuses the SAME persisted edge list — no
     * second edge relation), each normalization a broadcast 1-row sum.
-    * Returns (node, hub_e6, auth_e6) — zero where a node has no
-    * out-/in-edges. */
+    * Both score frames go through [[Fixpoint.cut]] every round, so the
+    * plan stays the same size round to round. Returns (node, hub_e6,
+    * auth_e6) — zero where a node has no out-/in-edges; `iters = 0`
+    * returns the initial assignment, 1e6 hub and authority per node. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .distinct().persist(lvl)
-    // each round joins the edge list on __src (auth step) and on __dst
-    // (hub step): past the deferred MEASURED gate (class doc — applied
-    // after round 1's materialization, no extra job), co-partition +
-    // sort ONE cached copy per orientation (guide §2.4) so no later
-    // round's join re-exchanges or re-sorts the edge relation
-    var eSrc = e0
-    var eDst = e0
-    var relaid = false
-    val nodes = e0.select(col("__src").as("node"))
-      .union(e0.select(col("__dst")))
+    val nodes = e.select(col("__src").as("node"))
+      .union(e.select(col("__dst")))
       .distinct().persist(lvl)
     def normalize(raw: DataFrame, valCol: String): DataFrame = {
       val total = raw.agg(sum(col(valCol)).as("__t"))
@@ -196,50 +117,28 @@ object Graph {
           expr(s"$valCol * 1000000L DIV __t").as(valCol))
     }
     var hub = nodes.select(col("node"), lit(1000000L).as("h"))
-    var auth: DataFrame = null
-    for (i <- 1 to iters) {
-      val prevHub = hub
-      val prevAuth = auth
-      // auth is persisted but NOT counted: the hub action below computes
-      // it once, populating the cache en route (one job per round, the
-      // pageRank shape) — a separate auth.count() would be a second
-      // materializing action doing the same work.
-      auth = normalize(
-        hub.join(eSrc, hub("node") === eSrc("__src"))
-          .groupBy(col("__dst").as("node")).agg(sum("h").as("a")), "a")
-        .persist(lvl)
-      val nextHub = normalize(
-        auth.join(eDst, auth("node") === eDst("__dst"))
-          .groupBy(col("__src").as("node")).agg(sum("a").as("h")), "h")
-        .persist(lvl)
-      nextHub.count() // materializes auth AND hub before releasing parents
-      if (i == 1 && iters > 1 && shouldRelayout(e0)) {
-        relaid = true
-        val s = e0.repartition(col("__src"))
-          .sortWithinPartitions("__src").persist(lvl)
-        s.count()
-        val d = e0.repartition(col("__dst"))
-          .sortWithinPartitions("__dst").persist(lvl)
-        d.count()
-        eSrc = s
-        eDst = d
-      }
-      prevHub.unpersist() // no-op on round 1's unpersisted seed
-      if (prevAuth != null) prevAuth.unpersist()
-      hub = nextHub
+    var auth = nodes.select(col("node"), lit(1000000L).as("a"))
+    for (_ <- 1 to iters) {
+      // auth's cut is lazy: the eager cut of hub reads it and
+      // materializes both, so a round costs one job
+      auth = Fixpoint.cut(normalize(
+        hub.join(e, hub("node") === e("__src"))
+          .groupBy(col("__dst").as("node")).agg(sum("h").as("a")), "a"),
+        eager = false)
+      hub = Fixpoint.cut(normalize(
+        auth.join(e, auth("node") === e("__dst"))
+          .groupBy(col("__src").as("node")).agg(sum("a").as("h")), "h"))
     }
-    val out = nodes
+    // materialize the output while `nodes` is cached, then release the
+    // loop-invariant relations
+    val out = Fixpoint.cut(nodes
       .join(hub.withColumnRenamed("h", "hub_e6"), Seq("node"), "left")
       .join(auth.withColumnRenamed("a", "auth_e6"), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub_e6"), lit(0L)).as("hub_e6"),
-        coalesce(col("auth_e6"), lit(0L)).as("auth_e6"))
-    // nodes is only read by the caller's action — materialize it off
-    // the cached e0 BEFORE releasing the edge caches, or that action
-    // would recompute the edge distinct from the raw input
-    nodes.count()
-    e0.unpersist()
-    if (relaid) { eSrc.unpersist(); eDst.unpersist() }
+        coalesce(col("auth_e6"), lit(0L)).as("auth_e6")))
+    e.unpersist()
+    nodes.unpersist()
     out
   }
 
@@ -273,7 +172,6 @@ object Graph {
     * recomputed. */
   def triangleStats(edges: DataFrame, aCol: String, bCol: String,
                     maxBroadcastEdges: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val canon = edges
       .select(least(col(aCol), col(bCol)).as("lo"),
         greatest(col(aCol), col(bCol)).as("hi"))
@@ -326,54 +224,22 @@ object Graph {
     out // stays persisted for the caller's action; clearCache releases it
   }
 
-  /** Fixed-round k-core peeling: run EXACTLY `rounds` iterations of
-    * "drop every node with degree < k, keep edges between survivors",
-    * then report surviving nodes with their final degree (≥ k). With
-    * enough rounds this is the k-core (the maximal subgraph of min
-    * degree k); the round count is part of the contract so the result
-    * is bit-identical on any engine/partitioning BY CONSTRUCTION —
-    * a converge-then-stop variant would tie the output to an
-    * engine-specific iteration count. Peeling is monotone, so extra
-    * rounds past the fixpoint are no-ops.
-    *
-    * Scale shape per round: one hash aggregate for degrees (map-side
-    * partials over the edge list) + two semi-joins of the edge list
-    * against the keep-set. The keep-set is node-sized — broadcast
-    * while the initial node count fits an executor
-    * (≤ maxBroadcastNodes), shuffle semi-joins past that.
-    *
-    * Lineage discipline: each round references the previous edge
-    * frame THREE times (the frame itself + two keep-set subtrees
-    * derived from it), so a persist-only loop grows the logical plan
-    * 3^rounds — [[Fixpoint.cut]] truncates the plan to the
-    * materialized RDD each round (reliable checkpoint when a dir is
-    * configured, executor-loss tolerant) and caps the carried size
-    * estimate, keeping round r's plan AND its statistics O(1). */
   /** Personalized PageRank: identical exact fixed-point arithmetic to
     * [[pageRank]], but the teleport mass lands ONLY on the seed set —
     *   r'(v) = [v ∈ S]·(0.15·10¹²) div |S| + (85 · Σ_{u→v} r(u) div deg(u)) div 100
     * — so rank concentrates around the seeds: the "similar to this
     * cohort" recommender primitive (seeds = one customer segment ⇒
     * ranks = supplier affinity to that segment). Same per-iteration
-    * scale shape as pageRank (one src-keyed join + one dst-keyed
-    * aggregate, rank frames persisted one round deep); the seed flag
-    * is a node-keyed left join computed once. Nodes unreachable from
-    * the seeds keep rank 0 (reported — their absence would silently
-    * change N-dependent comparisons). */
+    * scale shape and loop as pageRank (one src-keyed join + one
+    * dst-keyed aggregate, each rank frame cut with [[Fixpoint.cut]]);
+    * the seed flag is a node-keyed left join computed once. Nodes
+    * unreachable from the seeds keep rank 0 (reported — their absence
+    * would silently change N-dependent comparisons). `iters = 0`
+    * returns the initial assignment, 10¹² div |S| per seed. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int = 5): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // same discipline as pageRank (round 15): persist the 4-consumer
-    // edge projection through setup, deferred measured co-partition
-    // gate applied after round 1's materialization
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .persist(lvl)
-    // partitioned window count, as in pageRank: one exchange, one scan,
-    // cached partitioned + sorted by the loop join key by construction
-    val eDeg = e
-      .withColumn("__deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__src")))
       .persist(lvl)
     val seedSet = seeds.select(col(seedCol).as("node")).distinct()
     val nodes = e.select(col("__src").as("node"))
@@ -381,37 +247,10 @@ object Graph {
       .distinct()
       .join(seedSet.withColumn("__seed", lit(1L)), Seq("node"), "left")
       .persist(lvl)
-    val nSeeds = nodes.agg(sum(col("__seed")).as("__ns"))
-    // loop-invariant (node, seed, total) base persisted once, as in
-    // pageRank — never re-broadcast the total inside the loop
-    val nodesN = nodes.crossJoin(broadcast(nSeeds)).persist(lvl)
-    val teleport = expr("CASE WHEN __seed = 1 THEN 150000000000L DIV __ns ELSE 0L END")
-    var rank = nodesN
-      .select(col("node"),
-        expr("CASE WHEN __seed = 1 THEN 1000000000000L DIV __ns ELSE 0L END")
-          .as("rank_e12"))
-      .persist(lvl)
-    for (i <- 1 to iters) {
-      val contribs = rank
-        .join(eDeg, rank("node") === eDeg("__src"))
-        .select(col("__dst").as("node"), expr("rank_e12 DIV __deg").as("__c"))
-        .groupBy("node").agg(sum("__c").as("__in"))
-      val next = nodesN
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (teleport + expr("85L * coalesce(__in, 0L) DIV 100")).as("rank_e12"))
-        .persist(lvl)
-      next.count()
-      if (i == 1) {
-        e.unpersist()
-        nodes.unpersist()
-      }
-      rank.unpersist()
-      rank = next
-    }
-    eDeg.unpersist()
-    nodesN.unpersist()
-    rank.select(col("node"), col("rank_e12"))
+    rankLoop(e, nodes, sum(col("__seed")).as("__ns"),
+      init = "CASE WHEN __seed = 1 THEN 1000000000000L DIV __ns ELSE 0L END",
+      teleport = "CASE WHEN __seed = 1 THEN 150000000000L DIV __ns ELSE 0L END",
+      iters)
   }
 
   /** Fixed-round multi-source BFS: hop distance from the nearest seed,
@@ -449,6 +288,29 @@ object Graph {
     dist
   }
 
+  /** Fixed-round k-core peeling: run EXACTLY `rounds` iterations of
+    * "drop every node with degree < k, keep edges between survivors",
+    * then report surviving nodes with their final degree (≥ k). With
+    * enough rounds this is the k-core (the maximal subgraph of min
+    * degree k); the round count is part of the contract so the result
+    * is bit-identical on any engine/partitioning BY CONSTRUCTION —
+    * a converge-then-stop variant would tie the output to an
+    * engine-specific iteration count. Peeling is monotone, so extra
+    * rounds past the fixpoint are no-ops.
+    *
+    * Scale shape per round: one hash aggregate for degrees (map-side
+    * partials over the edge list) + two semi-joins of the edge list
+    * against the keep-set. The keep-set is node-sized — broadcast
+    * while the initial node count fits an executor
+    * (≤ maxBroadcastNodes), shuffle semi-joins past that.
+    *
+    * Lineage discipline: each round references the previous edge
+    * frame THREE times (the frame itself + two keep-set subtrees
+    * derived from it), so a persist-only loop grows the logical plan
+    * 3^rounds — [[Fixpoint.cut]] truncates the plan to the
+    * materialized RDD each round (reliable checkpoint when a dir is
+    * configured, executor-loss tolerant) and caps the carried size
+    * estimate, keeping round r's plan AND its statistics O(1). */
   def kPeel(edges: DataFrame, aCol: String, bCol: String, k: Int,
             rounds: Int, maxBroadcastNodes: Long = 5000000L): DataFrame = {
     // default sized for ~40 MB of long keys per broadcast (5M × 8 B) —
@@ -644,37 +506,26 @@ object Graph {
     * every partition and its partitionBy(node) cannot reuse the
     * (node, label) aggregate's partitioning), and NO nodes left-join:
     * edges are symmetric by contract, so every node receives at least
-    * one vote every round. Same persisted one-deep lineage discipline
-    * as pageRank: each round's labels are persisted and the parent
-    * released, so the plan never nests. */
+    * one vote every round. Each round's labels go through
+    * [[Fixpoint.cut]], as in pageRank, so the plan stays the same size
+    * every round. `rounds = 0` returns the initial labels (label =
+    * node). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 3): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // past the deferred MEASURED gate (class doc — applied after round
-    // 1's materialization, no extra job), co-partition + sort by the
-    // per-round join key ONCE (guide §2.4): later rounds' labels ⋈
-    // edges joins then reuse this cached exchange instead of
-    // re-shuffling/re-sorting the edge list
-    var e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .persist(lvl)
-    val nodes = e.select(col("__src").as("node"))
+    var labels = e.select(col("__src").as("node"))
       .union(e.select(col("__dst"))).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-      .persist(lvl)
-    for (i <- 1 to rounds) {
+      .select(col("node"), col("node").as("label"))
+    for (_ <- 1 to rounds) {
       // max of (count, -label) == most-frequent label, ties to SMALLEST
-      val next = labels
+      labels = Fixpoint.cut(labels
         .join(e, labels("node") === e("__src"))
         .groupBy(col("__dst").as("node"), col("label"))
         .agg(count(lit(1)).as("__c"))
         .groupBy("node")
         .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__w"))
-        .select(col("node"), (-col("__w.__nl")).as("label"))
-        .persist(lvl)
-      next.count()
-      if (i == 1 && rounds > 1 && shouldRelayout(e)) e = relayout(e, "__src")
-      labels.unpersist()
-      labels = next
+        .select(col("node"), (-col("__w.__nl")).as("label")))
     }
     e.unpersist()
     labels

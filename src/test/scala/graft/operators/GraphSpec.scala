@@ -21,35 +21,54 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pageRank: bit-identical under repartitioning (integer arithmetic)") {
-    val pairs = (1 to 40).map(i => (s"n${i % 7}", s"n${(i * 3) % 7}"))
-      .filter(p => p._1 != p._2).distinct
-    val df = pairs.toDF("src", "dst")
-    val a = Graph.pageRank(df, "src", "dst", iters = 3)
-      .as[(String, Long)].collect().toMap
-    val b = Graph.pageRank(df.repartition(13), "src", "dst", iters = 3)
-      .as[(String, Long)].collect().toMap
-    assert(a == b)
-  }
-
-  test("coPartition gate: forced co-partitioning is bit-identical to the simple shape (pageRank, hits, labelPropagation)") {
-    val pairs = (1 to 60).map(i => (i % 11L, (i * 5) % 11L))
-      .filter(p => p._1 != p._2).distinct
-    val df = pairs.toDF("src", "dst")
-    def all() = (
+    // also hits and labelPropagation, on a 7-node and an 11-node graph
+    def all(df: org.apache.spark.sql.DataFrame) = (
       Graph.pageRank(df, "src", "dst", iters = 3)
-        .as[(Long, Long)].collect().toMap,
+        .collect().map(r => r.get(0) -> r.getLong(1)).toMap,
       Graph.hits(df, "src", "dst", iters = 2)
-        .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap,
+        .collect().map(r => r.get(0) -> ((r.getLong(1), r.getLong(2)))).toMap,
       Graph.labelPropagation(
           df.union(df.select($"dst", $"src")).distinct(), "src", "dst",
           rounds = 2)
-        .as[(Long, Long)].collect().toMap)
-    val simple = all()
-    spark.conf.set("spark.graft.graph.copartitionMinEdges", "0")
-    val forced = try all()
-      finally spark.conf.unset("spark.graft.graph.copartitionMinEdges")
-    assert(forced == simple,
-      "the co-partitioned loop shape must not change any result")
+        .collect().map(r => r.get(0) -> r.get(1)).toMap)
+    val seven = (1 to 40).map(i => (i % 7L, (i * 3) % 7L))
+      .filter(p => p._1 != p._2).distinct.toDF("src", "dst")
+    val eleven = (1 to 60).map(i => (i % 11L, (i * 5) % 11L))
+      .filter(p => p._1 != p._2).distinct.toDF("src", "dst")
+    for (df <- Seq(seven, eleven)) {
+      val a = all(df)
+      assert(a._1.size == a._2.size && a._1.size == a._3.size)
+      assert(all(df.repartition(13)) == a)
+    }
+  }
+
+  test("rank loops release every cache at 0, 1 and 3 rounds; 0 rounds is the initial assignment") {
+    // labelPropagation needs numeric node ids: a star, hub 0
+    val df = (1L to 8L).flatMap(i => Seq((0L, i), (i, 0L))).toDF("src", "dst")
+    val nodes = 0L to 8L
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    def run(name: String, n: Int, out: => org.apache.spark.sql.DataFrame) = {
+      val rows = out.collect()
+      assert(cache.isEmpty, s"$name at $n rounds left a relation cached")
+      rows.map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    }
+    for (n <- Seq(0, 1, 3)) {
+      val pr = run("pageRank", n, Graph.pageRank(df, "src", "dst", iters = n))
+      val ppr = run("personalizedPageRank", n, Graph.personalizedPageRank(
+        df, "src", "dst", Seq(0L).toDF("s"), "s", iters = n))
+      val hits = run("hits", n, Graph.hits(df, "src", "dst", iters = n))
+      val lp = run("labelPropagation", n,
+        Graph.labelPropagation(df, "src", "dst", rounds = n))
+      assert(Seq(pr, ppr, hits, lp).forall(_.keySet == nodes.toSet))
+      if (n == 0) {
+        assert(pr == nodes.map(_ -> Seq(1000000000000L / 9)).toMap)
+        assert(ppr == nodes.map(v =>
+          v -> Seq(if (v == 0L) 1000000000000L else 0L)).toMap)
+        assert(hits == nodes.map(_ -> Seq(1000000L, 1000000L)).toMap)
+        assert(lp == nodes.map(v => v -> Seq(v)).toMap)
+      }
+    }
   }
 
   test("triangleStats: K4 and star give textbook censuses") {

@@ -169,26 +169,40 @@ class ScaleShapeSpec extends SparkSpec {
   test("iterative graph ops keep O(1) plans per round (lineage truncation)") {
     // kPeel references its previous frame 3x per round: without the
     // per-round localCheckpoint the logical plan grows 3^rounds and a
-    // 6-round run OOMs just STRINGIFYING the plan (observed). The
-    // regression gate: the round-6 plan must stay within small-constant
-    // size of the round-1 plan.
+    // 6-round run OOMs just STRINGIFYING the plan (observed). The rank
+    // loops reference it once, but a persisted chain still nests every
+    // earlier round's plan in the next. The regression gate: each op's
+    // round-6 plan must stay within small-constant size of its round-1
+    // plan.
     val g = (1 to 40).flatMap(i => Seq((i, i % 7 + 100), (i, i % 5 + 200)))
       .toDF("x", "y")
-    def planLen(rounds: Int): Int =
-      Graph.kPeel(g, "x", "y", k = 2, rounds = rounds)
-        .queryExecution.optimizedPlan.toString.length
-    val p1 = planLen(1)
-    val p6 = planLen(6)
-    assert(p6 < p1 * 4 + 10000,
-      s"round-6 plan ($p6 chars) blew up vs round-1 ($p1) — lineage leak")
+    val sym = g.union(g.select($"y", $"x"))
     val seeds = Seq(1).toDF("s")
-    def bfsLen(rounds: Int): Int =
-      Graph.bfsHops(g, "x", "y", seeds, "s", rounds)
-        .queryExecution.optimizedPlan.toString.length
-    val b1 = bfsLen(1)
-    val b6 = bfsLen(6)
-    assert(b6 < b1 * 4 + 10000,
-      s"round-6 BFS plan ($b6 chars) blew up vs round-1 ($b1) — lineage leak")
+    def bounded(name: String, op: Int => org.apache.spark.sql.DataFrame): Unit = {
+      def planLen(rounds: Int): Int =
+        op(rounds).queryExecution.optimizedPlan.toString.length
+      val p1 = planLen(1)
+      val p6 = planLen(6)
+      assert(p6 < p1 * 4 + 10000,
+        s"round-6 $name plan ($p6 chars) blew up vs round-1 ($p1) — lineage leak")
+    }
+    bounded("kPeel", r => Graph.kPeel(g, "x", "y", k = 2, rounds = r))
+    bounded("bfsHops", r => Graph.bfsHops(g, "x", "y", seeds, "s", r))
+    bounded("shortestPaths", r => Graph.shortestPaths(
+      g.withColumn("w", lit(1L)), "x", "y", "w", seeds, "s", r))
+    bounded("pageRank", r => Graph.pageRank(g, "x", "y", iters = r))
+    bounded("personalizedPageRank", r => Graph.personalizedPageRank(
+      g, "x", "y", seeds, "s", iters = r))
+    bounded("hits", r => Graph.hits(g, "x", "y", iters = r))
+    bounded("labelPropagation", r => Graph.labelPropagation(
+      sym, "x", "y", rounds = r))
+    // a caller asking for many rounds gets linear, not exponential, time
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    TimeLimits.failAfter(120.seconds) {
+      Graph.pageRank(g, "x", "y", iters = 20).collect()
+    }
   }
 
   test("stopGrams: totals ride a broadcast; no row-keyed join, no cartesian") {
