@@ -20,26 +20,37 @@ class GraphSpec extends SparkSpec {
     assert(total <= 1000000000000L && total > 990000000000L, total.toString)
   }
 
+  // pageRank, hits and labelPropagation on one graph, keyed by node
+  private def rankAll(df: org.apache.spark.sql.DataFrame) = (
+    Graph.pageRank(df, "src", "dst", iters = 3)
+      .collect().map(r => r.get(0) -> r.getLong(1)).toMap,
+    Graph.hits(df, "src", "dst", iters = 2)
+      .collect().map(r => r.get(0) -> ((r.getLong(1), r.getLong(2)))).toMap,
+    Graph.labelPropagation(
+        df.union(df.select($"dst", $"src")).distinct(), "src", "dst",
+        rounds = 2)
+      .collect().map(r => r.get(0) -> r.get(1)).toMap)
+
   test("pageRank: bit-identical under repartitioning (integer arithmetic)") {
-    // also hits and labelPropagation, on a 7-node and an 11-node graph
-    def all(df: org.apache.spark.sql.DataFrame) = (
-      Graph.pageRank(df, "src", "dst", iters = 3)
-        .collect().map(r => r.get(0) -> r.getLong(1)).toMap,
-      Graph.hits(df, "src", "dst", iters = 2)
-        .collect().map(r => r.get(0) -> ((r.getLong(1), r.getLong(2)))).toMap,
-      Graph.labelPropagation(
-          df.union(df.select($"dst", $"src")).distinct(), "src", "dst",
-          rounds = 2)
-        .collect().map(r => r.get(0) -> r.get(1)).toMap)
-    val seven = (1 to 40).map(i => (i % 7L, (i * 3) % 7L))
+    // also hits and labelPropagation
+    val df = (1 to 40).map(i => (i % 7L, (i * 3) % 7L))
       .filter(p => p._1 != p._2).distinct.toDF("src", "dst")
-    val eleven = (1 to 60).map(i => (i % 11L, (i * 5) % 11L))
+    val a = rankAll(df)
+    assert(a._1.size == a._2.size && a._1.size == a._3.size)
+    assert(rankAll(df.repartition(13)) == a)
+  }
+
+  test("coPartition gate: forced co-partitioning is bit-identical to the simple shape (pageRank, hits, labelPropagation)") {
+    // the loops no longer re-lay out their input; hash-partitioning the
+    // edges on the join key up front must still not change any result
+    val df = (1 to 60).map(i => (i % 11L, (i * 5) % 11L))
       .filter(p => p._1 != p._2).distinct.toDF("src", "dst")
-    for (df <- Seq(seven, eleven)) {
-      val a = all(df)
-      assert(a._1.size == a._2.size && a._1.size == a._3.size)
-      assert(all(df.repartition(13)) == a)
-    }
+    val simple = rankAll(df)
+    // node 0 only ever maps to itself, so the self-loop filter drops it
+    assert(simple._1.size == 10 && simple._2.size == 10 && simple._3.size == 10)
+    val forced = rankAll(df.repartition(7, $"src"))
+    assert(forced == simple,
+      "the co-partitioned input shape must not change any result")
   }
 
   test("rank loops release every cache at 0, 1 and 3 rounds; 0 rounds is the initial assignment") {
