@@ -1,28 +1,93 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 object Bench {
+  /** One row set's outcome: every row still in `runs` has exactly `n`
+    * trials; a row whose trial threw is in `errors` instead. */
+  final case class Trials(n: Int, runs: Map[String, Vector[Double]],
+                          errors: Map[String, String]) {
+    def medians: Map[String, Double] = runs.map { case (k, v) => k -> median(v) }
+  }
+
+  /** Median of the trials; for an even count, the mean of the middle two. */
+  def median(v: Seq[Double]): Double = {
+    val s = v.sorted
+    val m = s.length / 2
+    if (s.length % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
+  /** The trial grant for every row set. `sets` holds (set, rows, target
+    * trials) in grant order; `time(set, row)` runs one trial and returns
+    * its wall seconds and, if it threw, the error. Pass 1 gives every row
+    * of every set one trial. Then each set in turn gets its rounds
+    * 2..target, each round for every row of the set or for none: a round
+    * runs only if its projected cost (the sum of each row's mean trial so
+    * far) fits what is left of `budgetSec`, and the first round that does
+    * not fit ends that set's rounds. So every row of a set has the same
+    * trial count n. Every timed second bills the budget, failed trials
+    * included. Returns each set's outcome and the measured seconds. */
+  def grant(sets: Seq[(String, Seq[String], Int)], budgetSec: Double)(
+      time: (String, String) => (Double, Option[String]))
+      : (Map[String, Trials], Double) = {
+    var measured = 0.0
+    val runs = sets.map(_._1 -> mutable.LinkedHashMap.empty[String, Vector[Double]]).toMap
+    val errs = sets.map(_._1 -> mutable.LinkedHashMap.empty[String, String]).toMap
+    def trial(set: String)(row: String): Unit = {
+      val (sec, err) = time(set, row)
+      measured += sec
+      err match {
+        case None    => runs(set)(row) = runs(set).getOrElse(row, Vector.empty) :+ sec
+        case Some(m) => runs(set) -= row; errs(set)(row) = m
+      }
+    }
+    sets.foreach { case (set, rows, _) => rows.foreach(trial(set)) }
+    val out = sets.map { case (set, rows, target) =>
+      var n = if (rows.isEmpty) 0 else 1
+      def cost = runs(set).values.map(v => v.sum / v.length).sum
+      while (n < target && runs(set).nonEmpty && measured + cost <= budgetSec) {
+        runs(set).keys.toSeq.foreach(trial(set))
+        n += 1
+      }
+      set -> Trials(n, runs(set).toMap, errs(set).toMap)
+    }
+    (out.toMap, measured)
+  }
+
+  private def jstr(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replaceAll("[\\u0000-\\u001f]", " ") + "\""
+  // ms precision keeps the one-line JSON under the harness's output
+  // capture window (full-precision doubles overflowed it at ~95 queries
+  // and the line arrived truncated). Double.toString emits the shortest
+  // decimal, so 0.109 prints as "0.109".
+  private def ms3(sec: Double): String = (math.round(sec * 1000) / 1000.0).toString
+
+  /** The one-line JSON report of the "queries", "maintenance" and
+    * "serving" sets. Field ORDER is load-bearing: the harness keeps the
+    * TAIL of the output line, so the per-query dict comes FIRST, sorted
+    * ascending by median so the heaviest queries sit nearest the end,
+    * and the headline total/n_errors/sf fields come LAST where
+    * truncation cannot reach. */
+  def report(sets: Map[String, Trials], measuredSec: Double, budgetSec: Double,
+             maintTrials: Int, sfDir: String): String = {
+    val names = Seq("queries", "maintenance", "serving")
+    val Seq(head, maint, serving) = names.map(sets)
+    def dict(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    def secs(kv: Seq[(String, Double)]) = dict(kv.map { case (k, s) => k -> ms3(s) })
+    def errors(t: Trials) = t.errors.toSeq.sorted.map { case (k, m) => k -> jstr(m) }
+    val registryErrors = errors(head) ++ errors(maint)
+    // max/min trial ratio: the noise indicator, over the registry rows
+    val (noisyQ, noisySpread) = (head.runs ++ maint.runs)
+      .map { case (k, v) => k -> v.max / v.min.max(1e-9) }
+      .maxByOption(_._2).getOrElse("" -> 1.0)
+    val trialsN = dict(names.map(k => k -> sets(k).n.toString))
+    s"""{"queries":${secs(head.medians.toSeq.sortBy(_._2))},"maintenance":${secs(maint.medians.toSeq.sorted)},"errors":${dict(registryErrors)},"serving":${secs(serving.medians.toSeq.sorted)},"serving_errors":${dict(errors(serving))},"degraded_trials":[],"degraded_metric":"median","maint_trials":$maintTrials,"trials_n":$trialsN,"budget_sec":${ms3(budgetSec)},"measured_sec":${ms3(measuredSec)},"metric":"total","value":${ms3(head.medians.values.sum)},"unit":"sec","maintenance_sec":${ms3(maint.medians.values.sum)},"max_trial_spread":${ms3(noisySpread)},"spread_query":${jstr(noisyQ)},"n_errors":${registryErrors.size},"n_serving_errors":${serving.errors.size},"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The registry's global windows all run on provably bounded inputs
-    // (post-rollup day/vocab/group-sized relations — audited query by
-    // query in GlobalWindowAuditSpec, which fails if a new global
-    // window appears outside its allowlist). At WARN each occurrence
-    // still prints "No Partition Defined! Moving all data to a single
-    // partition" — hundreds of lines that drowned the driver tail in
-    // round 13 and made rc diagnostics unreadable. Silenced HERE (the
-    // harness entrypoint), not in library code: any unaudited global
-    // window is caught by the spec, not by log spam.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // untimed warm-up: session/JIT/file-index init otherwise lands on
     // whichever query happens to run first
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -44,39 +109,18 @@ object Bench {
         }
       } catch { case _: Throwable => () }
     }
-    // a failed query records an err entry, never a fake timing — a
-    // query that throws instantly must not look like a fast success.
-    // Each headline query is timed `trials` times and the MEDIAN
-    // reported: single-trial timings swung up to ~7x between rounds on
-    // unchanged plans (JIT/GC landing on whichever query ran first),
-    // which made a 2x regression gate unenforceable. Cache is cleared
-    // between trials so per-operator persisted relations never leak
-    // across timings.
+    // Trial targets: headline and serving rows `trials` each, the
+    // maintenance drills `maintTrials`; the budget is seconds spent
+    // inside timed trials (warm-up and sbt excluded).
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt
-    // Round 14 — the r13 driver bench TIMED OUT (rc=124, the first
-    // non-zero rc in 13 rounds): 3 trials × (302.5 s headline + 174.1 s
-    // maintenance) ≈ 1430 s of measured wall no longer fit the driver
-    // window. Two policy changes, both in the default path because the
-    // driver sets no env:
-    //  1. MAINTENANCE rows default to 1 trial. The 12 index-lifecycle
-    //     drills (q334 ~27 s, q335 ~37 s medians) cost ~522 s of the
-    //     ~1430 s at 3 trials; their correctness is CORRECTNESS's job
-    //     and their medians are informational, while the 2× gate reads
-    //     only the headline dict — which KEEPS median-of-`trials`.
-    //  2. A measured-wall-clock BUDGET (seconds spent inside timed
-    //     runs; warm-up/sbt excluded). Trial 1 of every row always
-    //     runs; EXTRA trials are granted cheapest-row-first so that
-    //     when the budget runs out it is the heaviest rows that fall
-    //     back to their trial-1 timing — recorded by name in
-    //     "degraded_trials" so the artifact says what it did.
     val maintTrials = sys.env.getOrElse("SPARK_GRAFT_MAINT_TRIALS", "1").toInt
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1100").toDouble
     // SPARK_GRAFT_ONLY=q78,q57 narrows the run for single-query iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }
+    def pick[T](m: Map[String, T]): Map[String, T] =
+      m.filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    val selected = pick(SparkEntry.queries)
     // One untimed run per memoized OFFLINE artifact (bucketed layout,
     // day-partitioned events, PQ index): the first-touch build otherwise
     // lands inside trial 1 of whichever query reaches the memo first and
@@ -91,177 +135,43 @@ object Bench {
           spark.catalog.clearCache()
         }
       }
-    // measured wall: every timed attempt bills the budget, successes
-    // and failures alike (a failing drill still spends driver window)
-    var measuredSec = 0.0
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
+    // The index-lifecycle drills build real indexes and run their full
+    // differential in-query (rebuilds, compactions, crash sims):
+    // maintenance-job costs, not query costs. They report in their own
+    // "maintenance" dict so the headline keeps tracking the query
+    // surface; headline + maintenance_sec = full registry cost. (q336 is
+    // a serving verdict on the memoized index — a headline row.)
+    val maintenanceRows = Set("q322", "q325", "q326", "q327", "q328",
+      "q329", "q330", "q331", "q332", "q333", "q334", "q335")
+    val (maintNames, headNames) =
+      selected.keys.toSeq.partition(n => maintenanceRows.exists(n.startsWith))
+    // SERVING-ONLY timings for the verdict rungs (registry rows time
+    // operator + in-query exact verification; these time the operator
+    // alone), reported in their own "serving" dict. A serving row that
+    // fails reports in "serving_errors" instead of vanishing: a missing
+    // key would read as "query removed", not "regression".
+    val serving = pick(SparkEntry.servingQueries)
+    val fns = Map("queries" -> selected, "maintenance" -> selected, "serving" -> serving)
+    // A failed trial records an error, never a fake timing: a query
+    // that throws instantly must not look like a fast success. Cache is
+    // cleared after every trial so persisted relations never leak
+    // across timings.
+    def time(fn: (SparkSession, String) => DataFrame): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      val err: Option[String] =
+      val err =
         try { fn(spark, sfDir).count(); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
         }
       spark.catalog.clearCache()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      measuredSec += elapsed
-      err match {
-        case None    => Right(elapsed)
-        case Some(m) => Left(m)
-      }
+      ((System.nanoTime() - t0) / 1e9, err)
     }
-    // The index-lifecycle VERDICT rows each build real indexes and run
-    // their full differential in-query (rebuilds, compactions, crash
-    // sims) — maintenance-job costs, not query costs, and the heaviest
-    // rows on the board. They are reported in a separate "maintenance"
-    // dict (like "serving"), so the headline total keeps tracking the
-    // QUERY surface round-over-round instead of growing with every new
-    // lifecycle verdict. Nothing is de-registered: the rows remain the
-    // correctness gate, and headline + maintenance_sec = full registry
-    // cost. (q336 is a serving verdict on the memoized index — a
-    // headline row, not a drill.)
-    val maintenanceRows = Set("q322", "q325", "q326", "q327", "q328",
-      "q329", "q330", "q331", "q332", "q333", "q334", "q335")
-    def isMaintenance(name: String): Boolean =
-      maintenanceRows.exists(name.startsWith)
-    val runs = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    val errs = scala.collection.mutable.Map.empty[String, String]
-    val degraded = scala.collection.mutable.LinkedHashSet.empty[String]
-    def runTrial(name: String): Unit = time(selected(name)) match {
-      case Right(s) => runs(name) = runs.getOrElse(name, Vector.empty) :+ s
-      case Left(m)  => errs.getOrElseUpdate(name, m); ()
+    val (sets, measuredSec) = grant(Seq(("queries", headNames, trials),
+        ("serving", serving.keys.toSeq, trials),
+        ("maintenance", maintNames, maintTrials)), budgetSec) {
+      (set, row) => time(fns(set)(row))
     }
-    def est(name: String): Double = {
-      val v = runs.getOrElse(name, Vector.empty)
-      if (v.isEmpty) 0.0 else v.sum / v.length
-    }
-    // PASS 1 — one trial of every selected row (this is the floor: the
-    // budget never sheds a row entirely, only its extra trials)
-    selected.keys.foreach(runTrial)
-    // PASS 2 — extra trials, HEAVIEST-first, round by round (round 15;
-    // the round-14 cheapest-first grant left the ~30 heaviest rows —
-    // which dominate the headline total — on single cold trials with
-    // observed 13× single-trial swing). Every row reaches 2 trials
-    // before any row gets its 3rd, so when the budget runs out it is
-    // third trials of the cheap tail that shed, never the first retry
-    // of a heavy row. Rows left short of their target are recorded in
-    // degraded_trials and reported as the MIN of their trials (see
-    // below) — cold-start inflation is one-sided, so min is the honest
-    // statistic for an under-sampled row. Headline rows target
-    // `trials`, maintenance rows `maintTrials` (default 1 → no
-    // extras). The grant checks the projected cost per row, so one
-    // over-estimate only degrades rows at the tail of its round.
-    def grantExtras(names: Seq[String], target: Int): Unit =
-      (2 to target).foreach { round =>
-        names.filterNot(errs.contains).sortBy(n => -est(n)).foreach { n =>
-          if (runs.getOrElse(n, Vector.empty).length < round) {
-            if (measuredSec + est(n) <= budgetSec) runTrial(n)
-            else { degraded += n; () }
-          }
-        }
-      }
-    val (maintNames, headNames) =
-      selected.keys.toSeq.partition(isMaintenance)
-    grantExtras(maintNames, maintTrials)
-    grantExtras(headNames, trials)
-    val results: Map[String, Either[String, (Double, Double)]] =
-      selected.map { case (name, _) =>
-        name -> (errs.get(name) match {
-          case Some(m) => Left(m)
-          case None =>
-            var sorted = runs(name).sorted
-            // (median, max/min trial spread) — the spread is the noise
-            // indicator: a 3-5× ratio means the box was busy during some
-            // trial and the median may be inflated (it manufactured four
-            // phantom regressions in round 4 and six in round 5). Instead
-            // of shipping the noisy number, SELF-CORRECT: give the query
-            // two more trials — by then the transient load has usually
-            // passed, and the 5-trial median shakes off the outliers. The
-            // reported spread keeps the ORIGINAL ratio so the artifact
-            // still says "this box was noisy here". Budget-gated like
-            // every other extra trial (degraded_trials records a skip).
-            val rawSpread = sorted.last / sorted.head.max(1e-9)
-            if (rawSpread > 5.0 && sorted.last > 0.3 && sorted.length > 1) {
-              if (measuredSec + 2 * est(name) <= budgetSec) {
-                val extra = (1 to 2).flatMap(_ => time(selected(name)).toOption)
-                sorted = (sorted ++ extra).sorted
-              } else { degraded += name; () }
-            }
-            // degraded rows (shed trials) report MIN, not median: their
-            // sample is under-sized and cold-start inflation is strictly
-            // one-sided, so the smallest observed trial is the least
-            // biased estimate (r14's single-cold-trial medians inflated
-            // the headline 542 s vs ~310 s honest). Disclosed in the
-            // artifact via degraded_trials + degraded_metric.
-            val v = if (degraded.contains(name)) sorted.head
-              else sorted(sorted.length / 2)
-            Right((v, rawSpread))
-        })
-      }
-    // SERVING-ONLY timings for the verdict rungs (registry rows time
-    // operator + in-query exact verification; these time the operator
-    // alone) — reported in a separate "serving" dict, never mixed into
-    // the headline total, so the serving path's cost stays comparable
-    // round-over-round. Sub-second rows: trial 1 always, extras
-    // budget-gated like the registry's.
-    val servingSelected = SparkEntry.servingQueries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith))
-    }
-    // A serving query that fails EVERY trial records an error entry in
-    // "serving_errors" instead of silently vanishing from the artifact —
-    // a disappeared key would read as "query removed", not "regression".
-    val serving = servingSelected.toSeq.map { case (name, fn) =>
-      val first = time(fn)
-      val raw = first +: (2 to trials).flatMap { _ =>
-        val e = first.toOption.getOrElse(0.0)
-        if (measuredSec + e <= budgetSec) Some(time(fn))
-        else { degraded += name; None }
-      }
-      val timings = raw.collect { case Right(s) => s }
-      name -> (if (timings.isEmpty)
-        Left(raw.collectFirst { case Left(m) => m }.getOrElse("no trials"))
-        else if (degraded.contains(name)) Right(timings.min)
-        else Right(timings.sorted.apply(timings.length / 2)))
-    }
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\u0000-\\u001f]", " ") + "\""
-    // ms precision keeps the one-line JSON under the harness's output
-    // capture window (full-precision doubles overflowed it at ~95
-    // queries and the line arrived truncated). Double.toString emits
-    // the shortest decimal, so 0.109 prints as "0.109".
-    def ms3(sec: Double): String = (math.round(sec * 1000) / 1000.0).toString
-    // Field ORDER is load-bearing: the harness keeps the TAIL of the
-    // output line, and in two consecutive rounds a head-first "total"
-    // (plus the slowest per-query timings) was truncated away. So: the
-    // per-query dict comes FIRST, sorted ascending by median so the
-    // heaviest queries sit nearest the end, and the headline
-    // total/n_errors/sf fields come LAST where truncation cannot reach.
-    val allOk = results.collect { case (k, Right((sec, spread))) => (k, sec, spread) }.toSeq
-    val ok = allOk.filterNot { case (k, _, _) => isMaintenance(k) }
-    val maint = allOk.filter { case (k, _, _) => isMaintenance(k) }
-    val qs = ok.sortBy(_._2)
-      .map { case (k, sec, _) => s"${jstr(k)}:${ms3(sec)}" }
-      .mkString("{", ",", "}")
-    val maintJson = maint.sortBy(_._1)
-      .map { case (k, sec, _) => s"${jstr(k)}:${ms3(sec)}" }
-      .mkString("{", ",", "}")
-    val errJson = results.collect { case (k, Left(m)) => s"${jstr(k)}:${jstr(m)}" }
-      .mkString("{", ",", "}")
-    val total = ok.map(_._2).sum
-    val maintTotal = maint.map(_._2).sum
-    val nErr = results.values.count(_.isLeft)
-    val (noisyQ, _, noisySpread) =
-      if (allOk.nonEmpty) allOk.maxBy(_._3) else ("", 0.0, 1.0)
-    val servingJson = serving.sortBy(_._1)
-      .collect { case (k, Right(sec)) => s"${jstr(k)}:${ms3(sec)}" }
-      .mkString("{", ",", "}")
-    val servingErrs = serving.sortBy(_._1)
-      .collect { case (k, Left(m)) => s"${jstr(k)}:${jstr(m)}" }
-      .mkString("{", ",", "}")
-    val nServingErr = serving.count(_._2.isLeft)
-    val degradedJson = degraded.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    println(s"""{"queries":$qs,"maintenance":$maintJson,"errors":$errJson,"serving":$servingJson,"serving_errors":$servingErrs,"degraded_trials":$degradedJson,"degraded_metric":"min","maint_trials":$maintTrials,"budget_sec":${ms3(budgetSec)},"measured_sec":${ms3(measuredSec)},"metric":"total","value":${ms3(total)},"unit":"sec","maintenance_sec":${ms3(maintTotal)},"max_trial_spread":${ms3(noisySpread)},"spread_query":${jstr(noisyQ)},"n_errors":$nErr,"n_serving_errors":$nServingErr,"sf":"$sfDir"}""")
+    println(report(sets, measuredSec, budgetSec, maintTrials, sfDir))
     spark.stop()
   }
 }

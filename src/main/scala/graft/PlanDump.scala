@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for selected registered queries —
@@ -26,17 +25,7 @@ object PlanDump {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession(cpus, "spark.sql.maxMetadataStringLength" -> "2000")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-slope harness for the persisted-index OPERATOR faces (the
@@ -27,18 +27,7 @@ object ScaleSlopes {
     require(args.length >= 1, "usage: ScaleSlopes <corpusDir>")
     val dir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same discipline as Bench/Verify: global windows are audited
-    // (GlobalWindowAuditSpec), the per-occurrence WARN is noise here
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession(cpus)
     import graft.analytics.{Dedup, Similarity}
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")

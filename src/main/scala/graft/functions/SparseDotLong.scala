@@ -65,8 +65,14 @@ case class SparseDotLong(tA: Expression, wA: Expression,
       case ArrayType(LongType, _) => true
       case _ => false
     }
+    // element types only: array nullability (containsNull) may differ
+    def elementType(dt: DataType) = dt match {
+      case ArrayType(et, _) => Some(et)
+      case _ => None
+    }
     if (terms(tA.dataType) && weights(wA.dataType)
-        && tB.dataType == tA.dataType && weights(wB.dataType))
+        && elementType(tB.dataType) == elementType(tA.dataType)
+        && weights(wB.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       "sparse_dot_long requires (array<string> | array<bigint> terms — " +

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,7 +58,10 @@ import org.apache.spark.sql.functions._
   *     width ratios, LIMIT and SAMPLE (Filter, Aggregate and Join keep
   *     or grow their child's size): an estimate ≤ 64 MB can only arise
   *     when every scan feeding the relation is itself tiny — at 100 TB
-  *     the estimate is TB-scale and the pre-gate never fires. Round 14
+  *     the estimate is TB-scale and the pre-gate never fires. Generate
+  *     (explode and friends) is the exception: it keeps its child's
+  *     estimate while the rows multiply, so a plan containing one
+  *     never takes the pre-gate and goes to the count gate. Round 14
   *     paid a persist + count() job per public call for the dispatch
   *     alone, 3× for nested ntile callers — measured +0.45-0.77 s per
   *     query at sf0.1 (q266 0.17→0.77, q191 0.30→1.07), pure fixed
@@ -100,14 +104,16 @@ object GlobalRank {
     * propagation rules except via width ratios / LIMIT / SAMPLE — says
     * the relation is comfortably one-task-sortable. Disabled whenever
     * the row gate is 0 (the specs' force-distributed switch must win)
-    * or the bytes gate is set to 0. */
+    * or the bytes gate is set to 0, and for any plan with a Generate,
+    * whose estimate does not grow with its rows. */
   private def statsSmall(df: DataFrame): Boolean = {
     if (smallLimit(df) <= 0) return false
     val maxBytes = df.sparkSession.conf
       .get("spark.graft.globalrank.maxSinglePartitionBytes",
         (1L << 26).toString).toLong
-    maxBytes > 0 &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(maxBytes)
+    val plan = df.queryExecution.optimizedPlan
+    maxBytes > 0 && plan.find(_.isInstanceOf[Generate]).isEmpty &&
+      plan.stats.sizeInBytes <= BigInt(maxBytes)
   }
 
   /** Persist the input and measure it: the count both drives the

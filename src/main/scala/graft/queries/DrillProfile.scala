@@ -6,7 +6,6 @@ package graft.queries
 // can be attributed (the registered query runs them as one opaque 50 s
 // block). Run:
 //   SPARK_GRAFT_CPUS=32 sbt "runMain graft.queries.DrillProfile /root/testdata/sf0.1"
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.analytics.{IndexStore, Similarity}
 import graft.streaming.IncrementalStream
@@ -15,16 +14,7 @@ object DrillProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val s = graft.LocalSession(cpus)
     def timed[T](label: String)(body: => T): T = {
       val t0 = System.nanoTime()
       val r = body

@@ -43,6 +43,12 @@ class ExpressionsSpec extends SparkSpec {
         tb.zip(wb).collect { case (t, w) if m.contains(t) => m(t) * w }.sum
       }
     assert(got == ref && got == Seq(3L * 11 + 5 * 13, 0L, 0L))
+    // term arrays that differ only in nullability (a column's
+    // array<string> holds nulls, a literal array does not) still analyze
+    val mixed = df.select(SparseDotLong($"ta", $"wa",
+        array(lit("c"), lit("d")), array(lit(10L), lit(100L))))
+      .as[Long].collect().toSeq
+    assert(mixed == Seq(3L * 10 + 5 * 100, 0L, 0L))
   }
 
   test("SparseDotLong: bigint-keyed variant equals the string-keyed dot under an order-preserving relabeling") {

@@ -174,6 +174,28 @@ class GlobalRankSpec extends SparkSpec {
         assert(out2.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
           "count-gated small path reads the pinned input")
       } finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionBytes")
+      // an exploded input keeps its child's tiny byte estimate while its
+      // rows multiply (10 -> 1000): the pre-gate must decline it, so the
+      // count gate runs and, with the row gate below 1000, the
+      // distributed plan is taken instead of the single-partition window
+      val exploded = spark.range(10)
+        .select(explode(sequence(lit(1L), lit(100L))).as("k"), $"id")
+        .select(($"id" * 100L + $"k").as("id"), pmod($"k", lit(7L)).as("v"))
+      spark.catalog.clearCache()
+      Thread.sleep(500)
+      jobs.set(0)
+      spark.conf.set("spark.graft.globalrank.maxSinglePartitionRows", "500")
+      try {
+        val out3 = GlobalRank.ntile(exploded, 5, Seq(col("v"), col("id")), "t")
+        val deadline = System.currentTimeMillis() + 10000
+        while (jobs.get() == 0 && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        assert(jobs.get() > 0,
+          "an exploded input must go to the measured count gate")
+        assert(out3.queryExecution.executedPlan.toString.contains("__gr_pid"),
+          "1000 rows over a 500-row gate must take the distributed plan")
+        assert(out3.count() == 1000)
+      } finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionRows")
     } finally sc.removeSparkListener(listener)
   }
 
