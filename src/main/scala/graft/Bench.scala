@@ -18,37 +18,41 @@ object Bench {
 
   /** The trial grant for every row set. `sets` holds (set, rows, target
     * trials) in grant order; `time(set, row)` runs one trial and returns
-    * its wall seconds and, if it threw, the error. Pass 1 gives every row
-    * of every set one trial. Then each set in turn gets its rounds
-    * 2..target, each round for every row of the set or for none: a round
-    * runs only if its projected cost (the sum of each row's mean trial so
-    * far) fits what is left of `budgetSec`, and the first round that does
-    * not fit ends that set's rounds. So every row of a set has the same
-    * trial count n. Every timed second bills the budget, failed trials
-    * included. Returns each set's outcome and the measured seconds. */
+    * its wall seconds and, if it threw, the error. Each set in turn gets
+    * pass 1, one trial for every row, and then its rounds 2..target, each
+    * round for every row of the set or for none: a round runs only if its
+    * projected cost (the sum of each row's mean trial so far) fits what is
+    * left of `budgetSec`, and the first round that does not fit ends that
+    * set's rounds. So every row of a set has the same trial count n, and
+    * a set's rounds are decided before any later set's pass 1 bills the
+    * budget: the maintenance drills, last and one trial each by default,
+    * never cost the headline its second round. Pass 1 always runs, so a
+    * late set's pass 1 can overrun the budget. Every timed second bills
+    * the budget, failed trials included. Returns each set's outcome and
+    * the measured seconds. */
   def grant(sets: Seq[(String, Seq[String], Int)], budgetSec: Double)(
       time: (String, String) => (Double, Option[String]))
       : (Map[String, Trials], Double) = {
     var measured = 0.0
-    val runs = sets.map(_._1 -> mutable.LinkedHashMap.empty[String, Vector[Double]]).toMap
-    val errs = sets.map(_._1 -> mutable.LinkedHashMap.empty[String, String]).toMap
-    def trial(set: String)(row: String): Unit = {
-      val (sec, err) = time(set, row)
-      measured += sec
-      err match {
-        case None    => runs(set)(row) = runs(set).getOrElse(row, Vector.empty) :+ sec
-        case Some(m) => runs(set) -= row; errs(set)(row) = m
-      }
-    }
-    sets.foreach { case (set, rows, _) => rows.foreach(trial(set)) }
     val out = sets.map { case (set, rows, target) =>
+      val runs = mutable.LinkedHashMap.empty[String, Vector[Double]]
+      val errs = mutable.LinkedHashMap.empty[String, String]
+      def trial(row: String): Unit = {
+        val (sec, err) = time(set, row)
+        measured += sec
+        err match {
+          case None    => runs(row) = runs.getOrElse(row, Vector.empty) :+ sec
+          case Some(m) => runs -= row; errs(row) = m
+        }
+      }
+      rows.foreach(trial)
       var n = if (rows.isEmpty) 0 else 1
-      def cost = runs(set).values.map(v => v.sum / v.length).sum
-      while (n < target && runs(set).nonEmpty && measured + cost <= budgetSec) {
-        runs(set).keys.toSeq.foreach(trial(set))
+      def cost = runs.values.map(v => v.sum / v.length).sum
+      while (n < target && runs.nonEmpty && measured + cost <= budgetSec) {
+        runs.keys.toSeq.foreach(trial)
         n += 1
       }
-      set -> Trials(n, runs(set).toMap, errs(set).toMap)
+      set -> Trials(n, runs.toMap, errs.toMap)
     }
     (out.toMap, measured)
   }

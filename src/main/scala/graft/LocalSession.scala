@@ -6,15 +6,15 @@ import org.apache.spark.sql.SparkSession
   * ScaleSlopes, DrillProfile) run on: `local[cpus]` with the graft
   * extensions, one shuffle partition per core, UTC session time, no UI,
   * WARN logging. Each main reads SPARK_GRAFT_CPUS with its own default
-  * and passes it here; `conf` adds main-specific settings. */
+  * and passes it here. */
 object LocalSession {
-  def apply(cpus: String, conf: (String, String)*): SparkSession = {
-    val spark = conf.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+  def apply(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The registry's global windows all run on provably bounded inputs

@@ -25,7 +25,8 @@ object PlanDump {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalSession(cpus, "spark.sql.maxMetadataStringLength" -> "2000")
+    val spark = LocalSession(cpus)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)

@@ -35,17 +35,21 @@ class BenchSpec extends AnyFunSuite {
   }
 
   private def dict(j: JsonNode): Map[String, JsonNode] =
-    j.fields().asScala.map(e => e.getKey -> e.getValue).toMap
+    j.properties().asScala.map(e => e.getKey -> e.getValue).toMap
 
   test("a budget that buys 2 of 3 rounds gives every headline row n = 2, reporting the mean of its two trials") {
     // pass 1: 1 + 2 = 3 s; round 2 projects 3 s (fits 12, measured 10);
-    // round 3 projects 2 + 3 = 5 s, 15 > 12, so the set stops at n = 2
-    val plan = Map("queries" -> Map("a" -> Seq(1.0, 3.0, 1.0), "b" -> Seq(2.0, 4.0, 2.0)))
+    // round 3 projects 2 + 3 = 5 s, 15 > 12, so the set stops at n = 2.
+    // The 10 s maintenance drill runs after the headline's rounds are
+    // decided; billed first, it would leave the headline at n = 1.
+    val plan = Map(
+      "queries" -> Map("a" -> Seq(1.0, 3.0, 1.0), "b" -> Seq(2.0, 4.0, 2.0)),
+      "maintenance" -> Map("q322_m" -> Seq(10.0)))
     val (out, measured, json, timer) = run(plan, budget = 12.0)
-    assert(out("queries").n == 2)
+    assert(out("queries").n == 2 && out("maintenance").n == 1)
     assert(out("queries").runs == Map("a" -> Vector(1.0, 3.0), "b" -> Vector(2.0, 4.0)))
-    assert(measured == 10.0)
-    assert(timer.calls.size == 4)
+    assert(measured == 20.0)
+    assert(timer.calls.size == 5 && timer.calls.last == ("maintenance" -> "q322_m"))
     val q = dict(json.get("queries"))
     assert(q("a").asDouble == 2.0 && q("b").asDouble == 3.0)
     assert(json.get("value").asDouble == 5.0)
@@ -77,8 +81,9 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("a serving row and a registry row with the same name get independent n and values") {
-    // headline x: 1 s trials, rounds 2 and 3 fit (6 -> 7 -> 8 s);
-    // serving x: 5 s trials, round 2 projects 13 s > 10, so n = 1
+    // headline x: 1 s trials, rounds 2 and 3 fit (1 -> 2.2 -> 3 s);
+    // serving x: 5 s trials, pass 1 reaches 8 s and round 2 projects
+    // 13 s > 10, so n = 1
     val plan = Map(
       "queries" -> Map("x" -> Seq(1.0, 1.2, 0.8)),
       "serving" -> Map("x" -> Seq(5.0)))
