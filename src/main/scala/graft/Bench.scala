@@ -82,11 +82,14 @@ object Bench {
     def errors(t: Trials) = t.errors.toSeq.sorted.map { case (k, m) => k -> jstr(m) }
     val registryErrors = errors(head) ++ errors(maint)
     // max/min trial ratio: the noise indicator, over the registry rows
-    val (noisyQ, noisySpread) = (head.runs ++ maint.runs)
-      .map { case (k, v) => k -> v.max / v.min.max(1e-9) }
-      .maxByOption(_._2).getOrElse("" -> 1.0)
+    // with 2+ trials; null when none has, since one trial shows no noise
+    val noisiest = (head.runs ++ maint.runs).collect {
+      case (k, v) if v.length >= 2 => k -> v.max / v.min.max(1e-9)
+    }.maxByOption(_._2)
+    val noisySpread = noisiest.fold("null")(q => ms3(q._2))
+    val noisyQ = noisiest.fold("null")(q => jstr(q._1))
     val trialsN = dict(names.map(k => k -> sets(k).n.toString))
-    s"""{"queries":${secs(head.medians.toSeq.sortBy(_._2))},"maintenance":${secs(maint.medians.toSeq.sorted)},"errors":${dict(registryErrors)},"serving":${secs(serving.medians.toSeq.sorted)},"serving_errors":${dict(errors(serving))},"degraded_trials":[],"degraded_metric":"median","maint_trials":$maintTrials,"trials_n":$trialsN,"budget_sec":${ms3(budgetSec)},"measured_sec":${ms3(measuredSec)},"metric":"total","value":${ms3(head.medians.values.sum)},"unit":"sec","maintenance_sec":${ms3(maint.medians.values.sum)},"max_trial_spread":${ms3(noisySpread)},"spread_query":${jstr(noisyQ)},"n_errors":${registryErrors.size},"n_serving_errors":${serving.errors.size},"sf":"$sfDir"}"""
+    s"""{"queries":${secs(head.medians.toSeq.sortBy(_._2))},"maintenance":${secs(maint.medians.toSeq.sorted)},"errors":${dict(registryErrors)},"serving":${secs(serving.medians.toSeq.sorted)},"serving_errors":${dict(errors(serving))},"degraded_trials":[],"degraded_metric":"median","maint_trials":$maintTrials,"trials_n":$trialsN,"budget_sec":${ms3(budgetSec)},"measured_sec":${ms3(measuredSec)},"metric":"total","value":${ms3(head.medians.values.sum)},"unit":"sec","maintenance_sec":${ms3(maint.medians.values.sum)},"max_trial_spread":$noisySpread,"spread_query":$noisyQ,"n_errors":${registryErrors.size},"n_serving_errors":${serving.errors.size},"sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {

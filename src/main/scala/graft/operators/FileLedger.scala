@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** K4/J4/I2: exactly-once *file* processing via a name-keyed ledger.
   *
@@ -15,6 +16,14 @@ import org.apache.spark.sql.functions._
   * Deliberately filename-keyed and content-blind — re-uploading a changed
   * file under the same name is NOT reprocessed. That is the reference's
   * observable behavior and is preserved (SURVEY §7.5.3).
+  *
+  * Lookups are batched: [[unprocessed]] answers any number of (folder,
+  * file) pairs, across folders, in ONE anti-join with one collect
+  * bounded by the candidate list, so an orchestrator asks once per run
+  * instead of once per source or table. [[load]] reads with the
+  * declared [[Schema]], so no footer schema-inference job runs before
+  * the lookup; a missing ledger is an empty local relation, so a lookup
+  * against it (and a lookup of no candidates) launches no job at all.
   *
   * Scale note: the ledger is (folder, file) pairs — usually small enough
   * to broadcast, so `newFiles` hints broadcast and candidate discovery
@@ -35,15 +44,17 @@ object FileLedger {
     * `graft.ledger.broadcastMaxBytes` (runtime conf). */
   val BroadcastMaxBytes: Long = 64L << 20
 
-  /** Read the ledger, or an empty one if it doesn't exist yet. */
+  /** Read the ledger with its declared [[Schema]] (the ledger is only
+    * ever written by [[append]], so its footers never need inferring),
+    * or an empty local relation if it doesn't exist yet. */
   def load(spark: SparkSession, ledgerPath: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(ledgerPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val schema = StructType.fromDDL(Schema)
     if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      spark.read.parquet(ledgerPath)
+      spark.read.schema(schema).parquet(ledgerPath)
     else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(Schema))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   /** J4: the reference's only anti-join — candidates minus already-seen,
@@ -71,20 +82,28 @@ object FileLedger {
       .write.mode("append").parquet(ledgerPath)
   }
 
-  /** Driver-side convenience used by the orchestrator: which of `files`
-    * under `folder` are unprocessed, in deterministic (sorted) order.
-    * Expressed AS the [[newFiles]] anti-join it otherwise duplicates —
-    * the ledger's seen-set is filtered and joined distributed (the
-    * folder filter pushes to the parquet scan), so a lake-lifetime
-    * ledger never materializes on the driver; the only collect is the
-    * result, bounded by the CALLER's candidate list (already
-    * driver-side by signature). */
+  /** Driver-side lookup used by the orchestrator: which of the
+    * candidate (folder, file) `pairs` are unprocessed, sorted. All pairs,
+    * whatever their folders, go through ONE [[newFiles]] anti-join: the
+    * ledger is filtered to the candidates' folders (the filter pushes to
+    * the parquet scan) and joined distributed, so a lake-lifetime ledger
+    * never materializes on the driver; the only collect is the result,
+    * bounded by the CALLER's candidate list (already driver-side by
+    * signature). No candidates means no job. */
+  def unprocessed(spark: SparkSession, ledgerPath: String,
+                  pairs: Seq[(String, String)]): Seq[(String, String)] =
+    if (pairs.isEmpty) Nil
+    else {
+      import spark.implicits._
+      val ledger = load(spark, ledgerPath)
+        .filter(col("folder_name").isin(pairs.map(_._1).distinct: _*))
+      newFiles(pairs.toDF("folder_name", "file_name"), ledger)
+        .as[(String, String)].collect().toSeq.sorted
+    }
+
+  /** The batched lookup for the `files` of one `folder`: which are
+    * unprocessed, in sorted order. */
   def unprocessed(spark: SparkSession, ledgerPath: String, folder: String,
-                  files: Seq[String]): Seq[String] = {
-    import spark.implicits._
-    val cands = files.toDF("file_name").withColumn("folder_name", lit(folder))
-    val ledger = load(spark, ledgerPath).filter(col("folder_name") === folder)
-    newFiles(cands, ledger)
-      .select("file_name").collect().map(_.getString(0)).toSeq.sorted
-  }
+                  files: Seq[String]): Seq[String] =
+    unprocessed(spark, ledgerPath, files.map(folder -> _)).map(_._2)
 }

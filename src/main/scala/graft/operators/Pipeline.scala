@@ -89,18 +89,33 @@ object Pipeline {
                        buildStar: Map[String, DataFrame] => Map[String, DataFrame],
                        hook: graft.operators.RunReport, retries: Int): RunReport = {
     val ledgerPath = s"$root/_ledger"
+    val stagingRoot = s"$root/staging"
     val stages = scala.collection.mutable.ArrayBuffer.empty[Quality.OperationMetadata]
+    // file-level exactly-once: one logical "file" per landing batch,
+    // keyed by the batch id the caller encodes in the source name; one
+    // logical file per staging folder for the warehouse load
+    def landPair(src: Source) = (src.name, s"${src.name}.batch")
+    def loadPair(name: String) = (s"staging/$name", s"$name.parquet")
 
-    // Stage 1+2: land sources into raw/ (full or ledger-gated incremental)
+    // Stage 1+2: land sources into raw/ (full or ledger-gated incremental).
+    // Its time includes the run's one ledger lookup, which covers every
+    // incremental landing batch and every staging folder this run can
+    // load (those on disk now plus those its sources will write). Only
+    // this run appends to the ledger after it: the landing stage drops
+    // each batch it marks from `pending` (a source listed twice still
+    // lands once), and each staging folder is loaded at most once, so
+    // the answer stays current without asking again.
     val landM = Quality.timed("land")
+    val stagedAtStart = Readers.listFolders(spark, stagingRoot)
+    val staged = (stagedAtStart ++ sources.map(_.name)).distinct
+    val pending = scala.collection.mutable.Set(FileLedger.unprocessed(spark, ledgerPath,
+      sources.filter(_.incremental).map(landPair) ++ staged.map(loadPair)): _*)
+    val landSkipped = scala.collection.mutable.Set.empty[String]
     sources.foreach { src =>
       val rawPath = s"$root/raw/${src.name}"
-      // file-level exactly-once: one logical "file" per landing batch,
-      // keyed by the batch id the caller encodes in the source name
-      val skip = src.incremental && FileLedger.unprocessed(
-        spark, ledgerPath, src.name, Seq(s"${src.name}.batch")).isEmpty
-      if (skip) landM.skipped += 1
-      else {
+      if (src.incremental && !pending(landPair(src))) {
+        landM.skipped += 1; landSkipped += src.name
+      } else {
         // the whole unit (source read + landing write + ledger mark)
         // re-attempts together: a transient source failure is the
         // reference's canonical retry case (retries: 2, pipeline.py:110).
@@ -128,21 +143,34 @@ object Pipeline {
           // a whole-JOB crash between the two (outside attempt()'s
           // in-process retry scope) re-lands the batch on the next run
           // (at-least-once, recoverable by downstream dedup).
-          if (src.incremental)
-            FileLedger.append(spark, ledgerPath, Seq((src.name, s"${src.name}.batch")))
+          if (src.incremental) {
+            FileLedger.append(spark, ledgerPath, Seq(landPair(src)))
+            pending -= landPair(src)
+          }
         }
       }
     }
     stages += landM.complete()
 
-    // Stage 3: transform raw/ -> staging/ (clean: rename/dropnull/dedup/trim)
+    // Stage 3: transform raw/ -> staging/ (clean: rename/dropnull/dedup/trim).
+    // A source is skipped when re-cleaning it is dead work: its landing
+    // was ledger-skipped (raw/ holds nothing new) AND staging/<name> is
+    // already ledger-loaded, so stage 4 would skip whatever this wrote.
+    // The reference skips a transform whose staging key exists
+    // (transform.py:160-169); the staging LEDGER row is required too
+    // because a run that crashed between landing and loading leaves a
+    // landed batch whose staging output never reached the warehouse:
+    // the next run must re-transform and load it. The staging folder
+    // must also still exist, or stage 4 would have no table to return.
     val cleanM = Quality.timed("transform")
     sources.foreach { src =>
-      attempt(cleanM, retries) {
+      if (landSkipped(src.name) && !pending(loadPair(src.name))
+          && stagedAtStart.contains(src.name)) cleanM.skipped += 1
+      else attempt(cleanM, retries) {
         val raw = Readers.parquet(spark, s"$root/raw/${src.name}")
         val cleaned = Clean.requireNonEmpty(
           Clean.clean(src.renames)(raw), src.name)
-        TableStore.writeParquet(cleaned, s"$root/staging/${src.name}")
+        TableStore.writeParquet(cleaned, s"$stagingRoot/${src.name}")
       }
     }
     stages += cleanM.complete()
@@ -150,19 +178,19 @@ object Pipeline {
     // Stage 4: warehouse load — each staging folder becomes a table,
     // ledger-gated per logical staging file: already-loaded names are
     // skipped even if content changed (bug-for-bug with the reference's
-    // name-keyed PROCESSED_FILES, snowflake_load.py:108-133)
+    // name-keyed PROCESSED_FILES, snowflake_load.py:108-133). The
+    // folders are those listed at the start of the run plus those this
+    // run's sources wrote (a skipped source's folder was listed), so the
+    // start-of-run lookup covers them all; only the ones loaded are read.
     val loadM = Quality.timed("warehouse_load")
-    val tables = Readers.discoverTables(spark, s"$root/staging").map {
-      case (name, df) =>
-        val folder = s"staging/$name"
-        val logicalFile = s"$name.parquet"
-        if (FileLedger.unprocessed(spark, ledgerPath, folder, Seq(logicalFile)).nonEmpty) {
-          attempt(loadM, retries) {
-            TableStore.loadIntoTable(spark, df, name)
-            FileLedger.append(spark, ledgerPath, Seq((folder, logicalFile)))
-          }
-        } else loadM.skipped += 1
-        name -> spark.table(name)
+    val tables = staged.sorted.map { name =>
+      val pair = loadPair(name)
+      if (pending(pair)) attempt(loadM, retries) {
+        TableStore.loadIntoTable(spark,
+          Readers.parquet(spark, s"$stagingRoot/$name"), name)
+        FileLedger.append(spark, ledgerPath, Seq(pair))
+      } else loadM.skipped += 1
+      name -> spark.table(name)
     }.toMap
     stages += loadM.complete()
 

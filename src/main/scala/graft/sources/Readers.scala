@@ -206,17 +206,21 @@ object Readers {
   def orc(spark: SparkSession, path: String*): DataFrame =
     spark.read.orc(path: _*)
 
-  /** S7: folder/table discovery — each subdirectory of `root` is one
-    * logical table (reference: snowflake_load.py:81-92 `Delimiter="/"`
-    * listing of `staging/`). Returns name -> DataFrame, sorted by name. */
-  def discoverTables(spark: SparkSession, root: String): Seq[(String, DataFrame)] = {
+  /** S7: the names of the subdirectories of `root`, sorted — one
+    * logical table each (reference: snowflake_load.py:81-92
+    * `Delimiter="/"` listing of `staging/`). A Hadoop listing on the
+    * driver, no Spark job; a missing root lists as empty. */
+  def listFolders(spark: SparkSession, root: String): Seq[String] = {
     val hadoopPath = new org.apache.hadoop.fs.Path(root)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hadoopPath)) Seq.empty
-    else fs.listStatus(hadoopPath).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .sortBy(_.getName)
-      .map(p => p.getName -> spark.read.parquet(p.toString))
+    else fs.listStatus(hadoopPath).toSeq.filter(_.isDirectory).map(_.getPath.getName).sorted
   }
+
+  /** S7: folder/table discovery — each [[listFolders]] subdirectory of
+    * `root` read as one Parquet table. Returns name -> DataFrame, sorted
+    * by name. */
+  def discoverTables(spark: SparkSession, root: String): Seq[(String, DataFrame)] =
+    listFolders(spark, root).map(n =>
+      n -> parquet(spark, new org.apache.hadoop.fs.Path(root, n).toString))
 }

@@ -94,6 +94,21 @@ class BenchSpec extends AnyFunSuite {
     assert(json.get("trials_n").get("serving").asInt == 1)
   }
 
+  test("max_trial_spread is null with one trial per row, the max/min ratio over rows with 2+ trials otherwise") {
+    // n = 1: one trial shows no noise, so there is no spread to report
+    val one = Map("queries" -> Map("a" -> Seq(2.0), "b" -> Seq(3.0)),
+      "maintenance" -> Map("q322_m" -> Seq(5.0)))
+    val (_, _, json1, _) = run(one, budget = 1.0)
+    assert(json1.get("max_trial_spread").isNull && json1.get("spread_query").isNull)
+    // n = 2 headline (a: 1 then 3 s, b: 2 then 2.5 s) beside a 1-trial drill
+    val two = Map("queries" -> Map("a" -> Seq(1.0, 3.0, 1.0), "b" -> Seq(2.0, 2.5, 2.0)),
+      "maintenance" -> Map("q322_m" -> Seq(10.0)))
+    val (out, _, json2, _) = run(two, budget = 12.0)
+    assert(out("queries").n == 2 && out("maintenance").n == 1)
+    assert(json2.get("max_trial_spread").asDouble == 3.0)
+    assert(json2.get("spread_query").asText == "a")
+  }
+
   test("a row whose first trial throws lands in errors, never in timings") {
     val plan = Map(
       "queries" -> Map("bad" -> Seq(-0.5), "ok" -> Seq(1.0, 2.0, 3.0)),

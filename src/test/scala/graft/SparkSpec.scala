@@ -8,6 +8,35 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` and counts the Spark jobs it launched. Jobs are told
+    * apart by a job group set on this thread (Spark carries it to the
+    * threads a query starts jobs from). Listener events arrive
+    * asynchronously but in order, so the count is read once a marker job
+    * run after `body` has been seen. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(g) if g == s"$group-marker" => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job event never arrived")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -52,6 +52,42 @@ class LedgerAndStoreSpec extends SparkSpec {
     assert(FileLedger.newFiles(cand, FileLedger.load(spark, dir)).count() == 0)
   }
 
+  test("FileLedger.load on an existing ledger launches no job and returns the inferred read's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-load").toString
+    FileLedger.append(spark, dir, Seq(("a", "f1"), ("b", "f2")))
+    FileLedger.append(spark, dir, Seq(("a", "f3")))
+    val (ledger, jobs) = countJobs(FileLedger.load(spark, dir))
+    assert(jobs == 0, s"declared-schema load must not infer footers (ran $jobs jobs)")
+    assert(ledger.schema == spark.read.parquet(dir).schema)
+    assert(ledger.collect().toSet == spark.read.parquet(dir).collect().toSet)
+    assert(ledger.count() == 3)
+  }
+
+  test("FileLedger.unprocessed: one batched lookup equals per-pair lookups across folders") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-batch").toString
+    FileLedger.append(spark, dir,
+      Seq(("a", "f1"), ("a", "f2"), ("b", "g1"), ("staging/c", "c.parquet"), ("e", "x")))
+    val cands = Seq(("b", "g2"), ("a", "f1"), ("staging/c", "c.parquet"), ("a", "f3"),
+      ("b", "g1"), ("d", "h1"), ("staging/d", "d.parquet"), ("a", "f2"))
+    val batched = FileLedger.unprocessed(spark, dir, cands)
+    val perPair = cands.filter { case (folder, file) =>
+      FileLedger.unprocessed(spark, dir, folder, Seq(file)).nonEmpty
+    }
+    assert(batched == perPair.sorted)
+    assert(batched == Seq(("a", "f3"), ("b", "g2"), ("d", "h1"), ("staging/d", "d.parquet")))
+  }
+
+  test("FileLedger.unprocessed: no candidates launch no job; a missing ledger reports every pair pending") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-edge").toString
+    FileLedger.append(spark, dir, Seq(("a", "f1")))
+    val (none, jobs) = countJobs(FileLedger.unprocessed(spark, dir, Nil))
+    assert(none.isEmpty && jobs == 0, s"an empty lookup ran $jobs jobs")
+    val missing = s"$dir/absent"
+    val cands = Seq(("b", "g1"), ("a", "f1"), ("a", "f0"))
+    assert(FileLedger.unprocessed(spark, missing, cands) == cands.sorted)
+    assert(FileLedger.unprocessed(spark, missing, "a", Seq("f2", "f1")) == Seq("f1", "f2"))
+  }
+
   test("appendByName aligns case-insensitively, fills missing with null") {
     val a = Seq((1L, "x")).toDF("id", "name")
     val b = Seq(("y", 2L)).toDF("NAME", "ID") // permuted + re-cased

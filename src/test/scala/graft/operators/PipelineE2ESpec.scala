@@ -106,11 +106,51 @@ class PipelineE2ESpec extends SparkSpec {
     assert(Quality.isNotNull(spark.table("fact_call_logs"), "customer_id"))
 
     // re-run: incremental sources are ledger-skipped -> same row counts
-    val report2 = Pipeline.run(spark, sources, root, star)
+    def contents(t: String) = spark.table(t).collect().map(_.toString).toSet
+    val staged = Seq("call_logs", "social_medias").map(t => t -> contents(t)).toMap
+    val (report2, jobs2) = countJobs(Pipeline.run(spark, sources, root, star))
     assert(spark.table("customers").count() == 2) // full reload overwrites staging
     assert(report2.stages.head.skipped == 2)      // both incremental batches skipped
+    // re-cleaning a ledger-skipped batch whose staging folder is already
+    // loaded is dead work: only the two full loads are transformed
+    val transform = report2.stages.find(_.operation == "transform").get
+    assert(transform.skipped == 2 && transform.processed == 2, transform)
+    assert(staged.forall { case (t, rows) => contents(t) == rows })
     assert(spark.table("fact_call_logs").select("call_id").as[String]
       .collect().toSet == Set("k1", "k2"))
+    // one ledger lookup, no dead transforms, reads of loaded folders only
+    assert(jobs2 <= 21, s"re-run launched $jobs2 Spark jobs, pinned at 21")
+  }
+
+  test("a batch landed but never loaded (crash between land and load) is transformed and loaded on the next run") {
+    val root = Files.createTempDirectory("pipe-crash").toString
+    val schema = StructType(Seq(
+      StructField("Call ID", StringType), StructField("v", StringType)))
+    // what the crashed run left: the landed batch and its landing ledger
+    // row, but no staging output and no staging ledger row
+    Readers.rows(spark, Seq(Row("k1", "x"), Row("k2", "y")), schema)
+      .write.parquet(s"$root/raw/crash_calls")
+    FileLedger.append(spark, s"$root/_ledger", Seq(("crash_calls", "crash_calls.batch")))
+    val calls = Pipeline.Source("crash_calls",
+      _ => throw new IllegalStateException("a ledger-marked batch must not land again"),
+      renames = Map("Call ID" -> "call_id"), incremental = true)
+    val report = Pipeline.run(spark, Seq(calls), root, _ => Map.empty)
+    val stage = report.stages.map(st => st.operation -> st).toMap
+    assert(stage("land").skipped == 1 && stage("land").processed == 0)
+    assert(stage("transform").processed == 1 && stage("transform").skipped == 0)
+    assert(stage("warehouse_load").processed == 1)
+    assert(spark.table("crash_calls").select("call_id").as[String].collect().toSet ==
+      Set("k1", "k2"))
+    assert(FileLedger.unprocessed(spark, s"$root/_ledger",
+      Seq(("staging/crash_calls", "crash_calls.parquet"))).isEmpty)
+    // a loaded batch whose staging folder was removed is re-cleaned, so
+    // the star stage still gets its table, but not loaded twice
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/staging/crash_calls"))
+    var tables = Set.empty[String]
+    val again = Pipeline.run(spark, Seq(calls), root, t => { tables = t.keySet; Map.empty })
+      .stages.map(st => st.operation -> st).toMap
+    assert(again("transform").processed == 1 && again("warehouse_load").skipped == 1)
+    assert(tables == Set("crash_calls") && spark.table("crash_calls").count() == 2)
   }
 
   test("transient source failure is retried and recorded (reference retries: 2)") {

@@ -136,5 +136,12 @@ class ReadersSpec extends SparkSpec {
     val found = Readers.discoverTables(spark, root)
     assert(found.map(_._1) == Seq("alpha", "beta"))
     assert(found.map(_._2.count()).sum == 3)
+    // the listing under it: directories only, sorted; a missing root is empty
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/a_file.txt"), "x")
+    Seq(4).toDF("x").write.parquet(s"$root/Gamma")
+    assert(Readers.listFolders(spark, root) == Seq("Gamma", "alpha", "beta"))
+    assert(Readers.discoverTables(spark, root).map(_._1) == Seq("Gamma", "alpha", "beta"))
+    assert(Readers.listFolders(spark, s"$root/absent").isEmpty)
+    assert(Readers.discoverTables(spark, s"$root/absent").isEmpty)
   }
 }
