@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
+import graft.sources.Readers
 object Bench {
   /** One row set's outcome: every row still in `runs` has exactly `n`
     * trials; a row whose trial threw is in `errors` instead. */
@@ -99,7 +100,7 @@ object Bench {
     // whichever query happens to run first
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count()
+      try Readers.parquet(spark, s"$sfDir/$t.parquet").limit(1).count()
       catch { case _: Throwable => () }
       // page-cache pre-touch: stream the table's raw bytes once so
       // first-touch disk I/O doesn't bill to whichever heavy row runs

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.Readers
 
 /** Scale-slope harness for the persisted-index OPERATOR faces (the
   * daily-ingest paths of q322/q323/q325/q326, without their verdicts'
@@ -30,9 +31,9 @@ object ScaleSlopes {
     val spark = LocalSession(cpus)
     import graft.analytics.{Dedup, Similarity}
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Readers.parquet(spark, s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Readers.parquet(spark, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val nDocs = docs.count()
     val nEmb = emb.count()
@@ -77,7 +78,7 @@ object ScaleSlopes {
     def landed(df: DataFrame, name: String): DataFrame = {
       val p = scratch(s"slope-$name")
       df.coalesce(1).write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
+      Readers.parquet(spark, p)
     }
     val docBatch = landed(docs.filter(col("doc_id") < 500)
       .select((col("doc_id") + 900000000L).as("doc_id"), col("text")),

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.Readers
 
 /** Deduplication operators for a training-data pipeline (SURVEY §7.4):
   * exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -614,7 +615,7 @@ object Dedup {
   /** Max meta-log seq (driver-side; rows = 1 + parameter rebuilds). */
   private def metaSeq(spark: org.apache.spark.sql.SparkSession,
                       path: String): Long =
-    spark.read.parquet(s"$path/meta")
+    Readers.parquet(spark, s"$path/meta")
       .agg(max(col("seq"))).head().getLong(0)
 
   /** Daily-ingest face: append a new batch's shingle sets and band

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
+import graft.sources.Readers
 
 /** Shared storage discipline of the two persisted index families
   * (MinHash-LSH: `shingles`/`bands`; IVF-PQ: `codes`). Each component
@@ -162,13 +163,13 @@ private[graft] object IndexStore {
 
   private def foldsAt(spark: SparkSession, path: String, component: String,
                       v: Long): Set[String] =
-    spark.read.parquet(foldsDir(path, component, v))
+    Readers.parquet(spark, foldsDir(path, component, v))
       .select("kind", "ref").collect()
       .filter(_.getString(0) == "batch").map(_.getString(1)).toSet
 
   def readBaseAt(spark: SparkSession, path: String, component: String,
                  pin: Pin): DataFrame =
-    spark.read.parquet(versionDir(path, component, pin.v))
+    Readers.parquet(spark, versionDir(path, component, pin.v))
 
   def readBase(spark: SparkSession, path: String, component: String): DataFrame =
     readBaseAt(spark, path, component, pinOf(spark, path, component))
@@ -208,7 +209,7 @@ private[graft] object IndexStore {
     * the count cost more than the census it saves. Falls back to the
     * serial count when Spark cannot read the dir (absent/empty). */
   def countDataFiles(spark: SparkSession, dir: String): Long =
-    try spark.read.parquet(dir).inputFiles
+    try Readers.parquet(spark, dir).inputFiles
       .count(_.endsWith(".parquet")).toLong
     catch { case _: Exception =>
       graft.operators.Layout.nParquetFiles(spark, dir) }
@@ -217,7 +218,7 @@ private[graft] object IndexStore {
     * fold manifest at install time; None for pre-upgrade manifests. */
   private def recordedBaseFiles(spark: SparkSession, path: String,
                                 component: String, v: Long): Option[Long] =
-    spark.read.parquet(foldsDir(path, component, v))
+    Readers.parquet(spark, foldsDir(path, component, v))
       .select("kind", "ref").collect()
       .collectFirst { case r if r.getString(0) == "base_files" =>
         r.getString(1).toLong }

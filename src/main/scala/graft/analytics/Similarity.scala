@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.ArrayDotLong
+import graft.sources.Readers
 
 /** Embedding similarity search (SURVEY §7.4): brute-force cosine top-k as
   * the exactness baseline, plus LSH-bucketed and IVF-style variants as the
@@ -794,7 +795,7 @@ object Similarity {
                                       path: String)
       : (Array[(Long, Array[Long], Double)], Array[Array[Array[Long]]]) = {
     val v = IndexStore.pinOf(spark, path, "codes").v
-    val cents = spark.read.parquet(s"${codesMetaDir(path, v)}/centroids")
+    val cents = Readers.parquet(spark, s"${codesMetaDir(path, v)}/centroids")
       .select(col("cell"), col("cv"), col("cnorm")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getDouble(2)))
     (cents, codebookAt(spark, path, v))
@@ -802,7 +803,7 @@ object Similarity {
 
   private def codebookAt(spark: org.apache.spark.sql.SparkSession,
                          path: String, v: Long): Array[Array[Array[Long]]] = {
-    val rows = spark.read.parquet(s"${codesMetaDir(path, v)}/codebook")
+    val rows = Readers.parquet(spark, s"${codesMetaDir(path, v)}/codebook")
       .select(col("sub"), col("code"), col("vals")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
     require(rows.nonEmpty, s"no codebook at ${codesMetaDir(path, v)}")
@@ -899,7 +900,7 @@ object Similarity {
   private[graft] def liveCodebookFpOf(spark: org.apache.spark.sql.SparkSession,
                                       path: String): String = {
     val v = IndexStore.pinOf(spark, path, "codes").v
-    spark.read.parquet(s"${codesMetaDir(path, v)}/centroids")
+    Readers.parquet(spark, s"${codesMetaDir(path, v)}/centroids")
       .select("cb_fp").head().getString(0)
   }
 
@@ -977,7 +978,7 @@ object Similarity {
           // its own copy — KB-scale, rewritten value-exact. Only a
           // rebuild retrains it.
           Seq("centroids", "codebook", "quant_baseline").foreach { m =>
-            spark.read.parquet(s"${codesMetaDir(path, next - 1)}/$m")
+            Readers.parquet(spark, s"${codesMetaDir(path, next - 1)}/$m")
               .coalesce(1).write.mode("overwrite")
               .parquet(s"${codesMetaDir(path, next)}/$m")
           }
@@ -1221,7 +1222,7 @@ object Similarity {
     val nCellsLive: Long =
       if (baselineDf.columns.contains("n_cells"))
         baselineDf.select("n_cells").head().getInt(0).toLong
-      else spark.read.parquet(s"${codesMetaDir(path, pin.v)}/centroids")
+      else Readers.parquet(spark, s"${codesMetaDir(path, pin.v)}/centroids")
         .count()
     // coalesce the sum BEFORE reading it: on an empty `current`, sum()
     // is null and getLong would NPE ahead of the intended require

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Readers
 
 /** Storage-layout and skew operators — the knobs that decide whether a
   * plan that is correct at 60k rows still runs at 100 TB. */
@@ -50,7 +51,7 @@ object Layout {
   def compact(spark: org.apache.spark.sql.SparkSession, srcDir: String,
               destDir: String, sortCol: String,
               rowsPerFile: Long): (Long, Long, Long) = {
-    val df = spark.read.parquet(srcDir)
+    val df = Readers.parquet(spark, srcDir)
     val rows = df.count()
     writeSized(df, destDir, sortCol, rowsPerFile, rows)
     (nParquetFiles(spark, srcDir), nParquetFiles(spark, destDir), rows)

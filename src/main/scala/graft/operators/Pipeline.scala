@@ -168,8 +168,7 @@ object Pipeline {
           && stagedAtStart.contains(src.name)) cleanM.skipped += 1
       else attempt(cleanM, retries) {
         val raw = Readers.parquet(spark, s"$root/raw/${src.name}")
-        val cleaned = Clean.requireNonEmpty(
-          Clean.clean(src.renames)(raw), src.name)
+        val cleaned = Clean.clean(src.renames, nonEmpty = Some(src.name))(raw)
         TableStore.writeParquet(cleaned, s"$stagingRoot/${src.name}")
       }
     }

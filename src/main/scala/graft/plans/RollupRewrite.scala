@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
+import graft.sources.Readers
 
 /** Materialized-rollup rewrite: a Catalyst optimizer `Rule[LogicalPlan]`
   * that answers covered aggregates from a pre-computed rollup table
@@ -75,7 +76,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
       count(lit(1)).as("n_rows")
     base.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(cubePath)
-    val cube = spark.read.parquet(cubePath).queryExecution.analyzed
+    val cube = Readers.parquet(spark, cubePath).queryExecution.analyzed
     register(name, Entry(normalize(basePath), dims,
       measures.map(m => m -> s"sum_$m"), "n_rows", cubePath, cube))
     if (!spark.experimental.extraOptimizations.contains(this)) {
@@ -102,10 +103,10 @@ object RollupRewrite extends Rule[LogicalPlan] {
     val deltaCube = delta.groupBy(e.dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val mergeAggs = (e.sumCols.map(_._2) :+ e.countCol)
       .map(c => sum(col(c)).as(c))
-    spark.read.parquet(readPath).unionByName(deltaCube)
+    Readers.parquet(spark, readPath).unionByName(deltaCube)
       .groupBy(e.dims.map(col): _*).agg(mergeAggs.head, mergeAggs.tail: _*)
       .write.mode("overwrite").parquet(newCubePath)
-    val cube = spark.read.parquet(newCubePath).queryExecution.analyzed
+    val cube = Readers.parquet(spark, newCubePath).queryExecution.analyzed
     register(name, e.copy(cubePath = newCubePath, cube = cube))
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.analytics.Similarity
+import graft.sources.Readers
 
 /** Embedding similarity search over `embeddings` (SURVEY §7.4).
   *
@@ -373,7 +374,7 @@ object EmbeddingQueries {
       val e = t(s, dir, "embeddings")
       val q7 = e.filter(col("vec_id") === 7)
       val idx = pqIndex(s, dir)
-      val stored = Similarity.topKPqAdcFromCodes(s.read.parquet(idx.codesPath),
+      val stored = Similarity.topKPqAdcFromCodes(Readers.parquet(s, idx.codesPath),
         q7, "vec_id", "embedding", k = 20, idx.cb)
       val inline = Similarity.topKPqAdc(e, "vec_id", "embedding", q7,
         k = 20, idx.cb)
@@ -412,7 +413,7 @@ object EmbeddingQueries {
       val errKm = Similarity.pqQuantizationError(e, "vec_id", "embedding", cb)
       val errInit = Similarity.pqQuantizationError(e, "vec_id", "embedding",
         Similarity.trainPqCodebook(e, "vec_id", "embedding"))
-      s.read.parquet(idx.codesPath)
+      Readers.parquet(s, idx.codesPath)
         .agg(count(lit(1)).as("n_coded"),
           sum(when(size(col("pq_code")) =!= 8
             || exists(col("pq_code"), c => c < 0 || c >= 16), 1L)
@@ -432,7 +433,7 @@ object EmbeddingQueries {
          ORDER BY qid""") { (s, dir) =>
       val e = t(s, dir, "embeddings")
       val idx = pqIndex(s, dir)
-      val codes = s.read.parquet(idx.codesPath)
+      val codes = Readers.parquet(s, idx.codesPath)
       val qs = e.filter(col("vec_id").isin(3, 7, 11, 19, 23))
       val many = Similarity.topKPqAdcManyFromCodes(codes, qs,
         "vec_id", "embedding", k = 10, idx.cb)
@@ -1178,7 +1179,7 @@ object EmbeddingQueries {
     "q75_embed_topk_pq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val idx = pqIndex(s, dir)
-      Similarity.topKPqAdcFromCodes(s.read.parquet(idx.codesPath),
+      Similarity.topKPqAdcFromCodes(Readers.parquet(s, idx.codesPath),
         e.filter(col("vec_id") === 7), "vec_id", "embedding", k = 20, idx.cb)
     }),
     "q81_embed_ivfpq_serve" -> ((s, dir) => {

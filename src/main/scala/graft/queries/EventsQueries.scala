@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.analytics.Events
+import graft.sources.Readers
 
 /** Event-stream operators over the `events` table (SURVEY §2.8/§7.4). */
 object EventsQueries {
@@ -977,7 +978,7 @@ object EventsQueries {
       // the directory key round-trips as an INFERRED DATE; the driver
       // envelope needs the yyyy-MM-dd string back (pandas renders a
       // date as 'yyyy-MM-dd 00:00:00' and the hash diverges)
-      val out = s.read.parquet(path)
+      val out = Readers.parquet(s, path)
         .filter(col("day").between("2024-01-08", "2024-01-14"))
         .groupBy(date_format(col("day"), "yyyy-MM-dd").as("day"))
         .agg(count(lit(1)).as("n_events"),
@@ -1013,7 +1014,7 @@ object EventsQueries {
       val dim = t(s, dir, "events")
         .select(to_date(col("ts")).as("day")).distinct()
         .filter(dayofmonth(col("day")) % 5 === 0)
-      val ev = s.read.parquet(path) // partition key `day` infers as DATE
+      val ev = Readers.parquet(s, path) // partition key `day` infers as DATE
       val out = ev.join(broadcast(dim), Seq("day"))
         .groupBy(date_format(col("day"), "yyyy-MM-dd").as("day"))
         .agg(count(lit(1)).as("n_events"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.analytics.TextAnalysis
 import graft.streaming.IncrementalStream
+import graft.sources.Readers
 
 /** Driver-visible batch-parity VERDICTS for the streaming operators
   * (streaming/IncrementalStream) — the q33 verdict pattern applied to
@@ -50,7 +51,7 @@ object StreamingParityQueries {
     * sf dir with a pathGlobFilter narrowing to this table's file. */
   private def tStream(s: SparkSession, dir: String, name: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/$name.parquet").schema
+    val schema = Readers.parquet(s, s"$dir/$name.parquet").schema
     val df = s.readStream.schema(schema)
       .option("pathGlobFilter", s"$name.parquet").parquet(dir)
     schema.fields.find(_.name == "ts").map(_.dataType) match {
@@ -73,7 +74,7 @@ object StreamingParityQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(dir)
+    Readers.parquet(spark, dir)
   }
 
   // fingerprint's normalization, verbatim in DuckDB (same as q31/q78)
@@ -247,7 +248,7 @@ object StreamingParityQueries {
         .getOrElse(sys.error("q315: upsert stream produced no table version"))
       def keyed(df: DataFrame) = df.select(col("user_id"), col("event_id"),
         cents(col("value")).as("vc"))
-      val streamTbl = keyed(s.read.parquet(s"$tableDir/v=$v"))
+      val streamTbl = keyed(Readers.parquet(s, s"$tableDir/v=$v"))
         .withColumn("__s", lit(1))
       val batchLww = keyed(ev
         .withColumn("__rn", row_number().over(
@@ -301,7 +302,7 @@ object StreamingParityQueries {
         }
         .start()
       sq.awaitTermination()
-      val updates = s.read.parquet(outDir)
+      val updates = Readers.parquet(s, outDir)
       // final state per key = its last update (keys are re-emitted each
       // batch that touches them)
       val finalEst = updates
@@ -395,7 +396,7 @@ object StreamingParityQueries {
         sq.awaitTermination()
         val v = IncrementalStream.latestVersion(s, cubeDir)
           .getOrElse(sys.error("q318: cube stream produced no version"))
-        val cube = s.read.parquet(s"$cubeDir/v=$v")
+        val cube = Readers.parquet(s, s"$cubeDir/v=$v")
           .select(col("l_returnflag"), col("l_linestatus"),
             col("sum_qty_c").as("cube_sum"), col("n_rows").as("cube_n"))
         val batch = li.groupBy("l_returnflag", "l_linestatus")
@@ -606,7 +607,7 @@ object StreamingParityQueries {
       val sq = IncrementalStream.minhashProbeStream(stream, "doc_id", "text",
         idx, outDir, tmpDir("graft_q330_ckpt"))
       sq.awaitTermination()
-      val streamed = s.read.parquet(outDir)
+      val streamed = Readers.parquet(s, outDir)
         .select("id_new", "id_corpus", "common", "n_new", "n_corpus")
         .withColumn("__s", lit(1))
       val oneShot = Dedup.probeMinhashIndex(s, idx, arrivals, "doc_id", "text")
@@ -695,7 +696,7 @@ object StreamingParityQueries {
         }
         .start()
       sq.awaitTermination()
-      val out = s.read.parquet(outDir)
+      val out = Readers.parquet(s, outDir)
         .withColumn("__rn", row_number().over(
           Window.partitionBy("user_id").orderBy(col("batch_id").desc)))
         .filter(col("__rn") === 1)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Readers
 
 package object queries {
 
@@ -28,7 +29,7 @@ package object queries {
     *     value-identical and matches DuckDB's naive reading. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Readers.parquet(spark, s"$dir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
         df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.StructType
   * aws_infrastructure/snowflake.tf:86).
   *
   * Spark-first mapping: `spark.read` with `inferSchema` replaces pandas
-  * inference; Parquet is self-describing so the reference's
-  * DDL-from-first-file probe (snowflake_load.py:234-235) disappears;
+  * inference; Parquet is self-describing, so the reference's
+  * DDL-from-first-file probe (snowflake_load.py:234-235) shrinks to
+  * reading that footer for the scan's schema ([[parquet]]);
   * file listing, pagination and the 10-thread pool
   * (customerload.py:18,151-159) collapse into Spark's task parallelism
   * over input splits.
@@ -52,10 +53,24 @@ object Readers {
   def json(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
 
-  /** S5: Parquet scan; multi-file reads are an implicit UNION ALL with
-    * footer schema merge (reference: transform.py:71-83 per-file loop). */
-  def parquet(spark: SparkSession, path: String*): DataFrame =
-    spark.read.parquet(path: _*)
+  /** S5: Parquet scan; multi-file reads are an implicit UNION ALL
+    * (reference: transform.py:71-83 per-file loop). Without schema
+    * merging Spark takes the schema from ONE footer (a summary file, else
+    * the first data file by path), as the reference does
+    * (snowflake_load.py:234-235). For one path that is a file, a flat
+    * directory of files or a streaming sink's output, that footer is
+    * read on the driver (`Shim.parquetSchema`) and handed to the read
+    * as its schema, so building the DataFrame launches no Spark job.
+    * Every other read (several paths, a glob, subdirectories such as
+    * partitions, `spark.sql.parquet.mergeSchema` on, no data file, an
+    * unreadable footer) is `spark.read.parquet` itself, with Spark's own
+    * schema and errors. */
+  def parquet(spark: SparkSession, path: String*): DataFrame = path match {
+    case Seq(p) =>
+      org.apache.spark.sql.graftshim.Shim.parquetSchema(spark, p)
+        .fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
+    case _ => spark.read.parquet(path: _*)
+  }
 
   /** S3: sheet-like in-memory rows (Google Sheets analog). The reference
     * fetches all records driver-side (google_sheets.py:76-77); the Spark

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.sources.Readers
 
 /** I1/I2: the reference's incremental semantics on Structured Streaming.
   *
@@ -257,7 +258,7 @@ object IncrementalStream {
         val next = latestVersion(spark, tableDir, below = Some(batchId)) match {
           case Some(v) =>
             graft.operators.Scd.upsertByKey(
-              spark.read.parquet(s"$tableDir/v=$v"), lww, keyCols)
+              Readers.parquet(spark, s"$tableDir/v=$v"), lww, keyCols)
           case None => lww
         }
         next.write.mode("overwrite").parquet(s"$tableDir/v=$batchId")

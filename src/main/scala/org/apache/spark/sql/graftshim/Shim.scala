@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Bridge to `private[sql]` Column<->Expression conversion (Spark 4 moved
   * Column onto ColumnNode; attaching a custom catalyst Expression needs
   * ExpressionUtils, which is sql-private). This is the minimal, standard
-  * extension-point shim — no behavior, just visibility. */
+  * extension-point shim: visibility, plus the few helpers below that are
+  * built from Spark-private pieces. */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -73,4 +74,69 @@ object Shim {
   def flushListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Boolean =
     try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * from one footer, with no Spark job. Spark 4 reads that one footer
+    * inside a one-task job (`ParquetUtils.inferSchema` →
+    * `ParquetFileFormat.mergeSchemasInParallel`); the reference reads
+    * it on the driver (snowflake_load.py:234-235, the first file's
+    * footer).
+    *
+    * This follows the non-merging branch of `ParquetUtils.inferSchema`:
+    * the files Spark would list (a Hadoop listing filtered by
+    * `HadoopFSUtils.shouldFilterOutPathName`, or a streaming sink's
+    * log), sorted by path string as `splitFiles` does; then
+    * `_common_metadata`, else `_metadata`, else the first data file;
+    * its footer read with `SKIP_ROW_GROUPS` and converted by
+    * `readSchemaFromFooter` with the converter flags
+    * `mergeSchemasInParallel` passes.
+    *
+    * None wherever the read is not plain, so the caller leaves it to
+    * Spark: schema merging on, a glob, a directory with any
+    * subdirectory (partitions), a partitioned sink, no data file, or a
+    * footer that fails to read or convert (a missing path lands here). */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet._
+    import org.apache.spark.sql.execution.streaming.runtime.MetadataLogFileIndex
+    import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.conf
+    val root = new Path(path)
+    if (conf.isParquetSchemaMergingEnabled ||
+        org.apache.spark.deploy.SparkHadoopUtil.get.isGlobPath(root)) None
+    else try {
+      val hadoopConf = session.sessionState.newHadoopConf()
+      val files: Seq[FileStatus] =
+        if (FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf)) {
+          val index = new MetadataLogFileIndex(session, root, Map.empty, None)
+          if (index.partitionSchema.isEmpty) index.allFiles() else Nil
+        } else {
+          val listed = root.getFileSystem(hadoopConf).listStatus(root).toSeq
+            .filterNot(f => org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(f.getPath.getName))
+          if (listed.exists(_.isDirectory)) Nil else listed
+        }
+      val summaryNames = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      val (summaries, data) = files.sortBy(_.getPath.toString)
+        .partition(f => summaryNames.contains(f.getPath.getName))
+      summaryNames.flatMap(n => summaries.find(_.getPath.getName == n))
+        .headOption.orElse(data.headOption)
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+          val converter = new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+        }
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
 }

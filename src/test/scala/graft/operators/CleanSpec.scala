@@ -55,6 +55,23 @@ class CleanSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Clean.requireNonEmpty(empty) }
   }
 
+  test("clean's non-empty guard probes before the dedup: no shuffle, all-duplicate input passes, all-null fails") {
+    val dir = java.nio.file.Files.createTempDirectory("clean-guard").toString
+    Seq.fill(200)(("  a ", "b")).toDF("x", "y").repartition(4).write.parquet(s"$dir/dups")
+    val dups = spark.read.parquet(s"$dir/dups")
+    val (out, jobs, shuffled) = jobStats(Clean.clean(nonEmpty = Some("dups"))(dups))
+    assert(jobs >= 1, "the guard must probe at construction")
+    assert(shuffled == 0L, s"the probe wrote $shuffled shuffle bytes")
+    // the listener does see a dedup's shuffle when one runs
+    assert(jobStats(dups.dropDuplicates().collect())._3 > 0L)
+    assert(out.collect().map(_.toString).toSeq == Seq("[a,b]"))
+    Seq[(String, String)]((null, null), (null, null)).toDF("x", "y").write.parquet(s"$dir/nulls")
+    val e = intercept[IllegalArgumentException] {
+      Clean.clean(nonEmpty = Some("nulls"))(spark.read.parquet(s"$dir/nulls"))
+    }
+    assert(e.getMessage.contains("[nulls] DataFrame is empty after cleaning"))
+  }
+
   test("pseudonymize: joinability survives, NULLs stay NULL, rotation unlinks") {
     val a = Seq((1L, Some("x")), (2L, None), (3L, Some("y"))).toDF("k", "v")
     val b = Seq((1L, "o1"), (1L, "o2"), (3L, "o3"), (9L, "o9")).toDF("k", "ref")

@@ -118,8 +118,10 @@ class PipelineE2ESpec extends SparkSpec {
     assert(staged.forall { case (t, rows) => contents(t) == rows })
     assert(spark.table("fact_call_logs").select("call_id").as[String]
       .collect().toSet == Set("k1", "k2"))
-    // one ledger lookup, no dead transforms, reads of loaded folders only
-    assert(jobs2 <= 21, s"re-run launched $jobs2 Spark jobs, pinned at 21")
+    // one ledger lookup, no dead transforms, reads of loaded folders
+    // only, no schema-inference job per read, no dedup shuffle in the
+    // non-empty probe
+    assert(jobs2 <= 19, s"re-run launched $jobs2 Spark jobs, pinned at 19")
   }
 
   test("a batch landed but never loaded (crash between land and load) is transformed and loaded on the next run") {
@@ -151,6 +153,24 @@ class PipelineE2ESpec extends SparkSpec {
       .stages.map(st => st.operation -> st).toMap
     assert(again("transform").processed == 1 && again("warehouse_load").skipped == 1)
     assert(tables == Set("crash_calls") && spark.table("crash_calls").count() == 2)
+  }
+
+  test("an all-null batch fails the transform and leaves the previous staging rows untouched") {
+    val root = Files.createTempDirectory("pipe-nulls").toString
+    val schema = StructType(Seq(
+      StructField("id", StringType), StructField("v", StringType)))
+    var batch = Seq(Row("r1", "x"), Row("r2", "y"))
+    val src = Pipeline.Source("nully", s => Readers.rows(s, batch, schema))
+    Pipeline.run(spark, Seq(src), root, _ => Map.empty)
+    def staged = spark.read.parquet(s"$root/staging/nully").collect().map(_.toString).toSet
+    val before = staged
+    assert(before == Set("[r1,x]", "[r2,y]"))
+    batch = Seq(Row(null, null), Row(null, null))
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, Seq(src), root, _ => Map.empty, retries = 0)
+    }
+    assert(e.getMessage.contains("[nully] DataFrame is empty after cleaning"))
+    assert(staged == before)
   }
 
   test("transient source failure is retried and recorded (reference retries: 2)") {

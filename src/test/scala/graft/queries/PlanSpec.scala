@@ -23,6 +23,11 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  test("q03: constructing the query launches no Spark job (driver-side footer schema)") {
+    val (_, jobs) = countJobs(SparkEntry.queries("q03_clean_rename")(spark, sf))
+    assert(jobs == 0, s"constructing q03 launched $jobs Spark jobs")
+  }
+
   test("q01: column pruning reaches the parquet scan") {
     val p = planOf("q01_scan_project")
     assert(p.contains("ReadSchema"))

@@ -144,4 +144,153 @@ class ReadersSpec extends SparkSpec {
     assert(Readers.listFolders(spark, s"$root/absent").isEmpty)
     assert(Readers.discoverTables(spark, s"$root/absent").isEmpty)
   }
+
+  /** `Readers.parquet(p)` against Spark's own inferred read of `p`:
+    * the same schema and rows. Returns the jobs building the frame took. */
+  private def parquetParity(p: String): Int = {
+    val (df, jobs) = countJobs(Readers.parquet(spark, p))
+    val ref = spark.read.parquet(p)
+    assert(df.schema == ref.schema, s"schema differs at $p")
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    assert(rows(df) == rows(ref), s"rows differ at $p")
+    jobs
+  }
+
+  /** The one data file Spark wrote under `dir`. */
+  private def partFile(dir: String): java.nio.file.Path = {
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.length == 1, parts.toSeq)
+    parts.head.toPath
+  }
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A directory of two single-file parts with drifted schemas: `name1`
+    * holds (id, a), `name2` holds (id, a, extra). */
+  private def driftedDir(name1: String, name2: String): String = {
+    import spark.implicits._
+    val root = tmpDir
+    Seq((1L, "x"), (2L, "y")).toDF("id", "a").coalesce(1).write.parquet(s"$root/narrow")
+    Seq((3L, "z", 3.5)).toDF("id", "a", "extra").coalesce(1).write.parquet(s"$root/wide")
+    val dir = s"$root/t"
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    Files.copy(partFile(s"$root/narrow"), java.nio.file.Paths.get(s"$dir/$name1"))
+    Files.copy(partFile(s"$root/wide"), java.nio.file.Paths.get(s"$dir/$name2"))
+    Files.writeString(java.nio.file.Paths.get(s"$dir/_SUCCESS"), "")
+    dir
+  }
+
+  test("parquet: a single file and a flat directory read their schema with no Spark job") {
+    import spark.implicits._
+    val root = tmpDir
+    Seq((1L, "a", 1.5), (2L, null, 2.5)).toDF("id", "name", "score")
+      .repartition(3).write.parquet(s"$root/multi")
+    assert(parquetParity(s"$root/multi") == 0)
+    Seq((1L, "a")).toDF("id", "name").coalesce(1).write.parquet(s"$root/one")
+    assert(parquetParity(partFile(s"$root/one").toString) == 0)
+  }
+
+  test("parquet: drifted parts take the schema of the lexicographically first file") {
+    val narrowFirst = driftedDir("part-a.parquet", "part-b.parquet")
+    assert(parquetParity(narrowFirst) == 0)
+    assert(Readers.parquet(spark, narrowFirst).columns.toSeq == Seq("id", "a"))
+    val wideFirst = driftedDir("part-b.parquet", "part-a.parquet")
+    assert(parquetParity(wideFirst) == 0)
+    assert(Readers.parquet(spark, wideFirst).columns.toSeq == Seq("id", "a", "extra"))
+  }
+
+  test("parquet: a summary file decides the schema, as in Spark") {
+    import spark.implicits._
+    val dir = s"$tmpDir/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "name").repartition(2).write
+      .option("parquet.summary.metadata.level", "ALL").parquet(dir)
+    assert(new java.io.File(s"$dir/_common_metadata").exists())
+    assert(parquetParity(dir) == 0)
+  }
+
+  test("parquet: spark.sql.parquet.mergeSchema on falls back to Spark's merged schema") {
+    val dir = driftedDir("part-a.parquet", "part-b.parquet")
+    withConf("spark.sql.parquet.mergeSchema", "true") {
+      assert(org.apache.spark.sql.graftshim.Shim.parquetSchema(spark, dir).isEmpty)
+      parquetParity(dir)
+      assert(Readers.parquet(spark, dir).columns.toSeq == Seq("id", "a", "extra"))
+    }
+  }
+
+  test("parquet: a partitioned directory falls back to Spark's read") {
+    import spark.implicits._
+    val dir = s"$tmpDir/p"
+    graft.operators.TableStore.writePartitioned(
+      Seq((1L, "2024-01-01"), (2L, "2024-01-02")).toDF("id", "day"), dir, Seq("day"))
+    assert(org.apache.spark.sql.graftshim.Shim.parquetSchema(spark, dir).isEmpty)
+    parquetParity(dir)
+    assert(Readers.parquet(spark, dir).columns.toSeq == Seq("id", "day"))
+  }
+
+  /** A file whose `ts` is INT64 TIMESTAMP(NANOS), which Spark cannot
+    * write: written with parquet-mr's example writer. */
+  private def nanosFile(): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 id; optional int64 ts (TIMESTAMP(NANOS,true)); }")
+    val path = s"$tmpDir/events.parquet"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(
+        HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+      .withType(schema).withConf(conf).build()
+    val rows = new SimpleGroupFactory(schema)
+    try Seq(1L -> 1700000000123456789L, 2L -> 1700000001000000001L).foreach {
+      case (id, ts) => w.write(rows.newGroup().append("id", id).append("ts", ts))
+    } finally w.close()
+    path
+  }
+
+  test("parquet: TIMESTAMP(NANOS) follows spark.sql.legacy.parquet.nanosAsLong") {
+    val events = nanosFile()
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+      assert(parquetParity(events) == 0)
+      assert(Readers.parquet(spark, events).schema("ts").dataType == LongType)
+    }
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+      val ours = intercept[Exception](Readers.parquet(spark, events))
+      val spark0 = intercept[Exception](spark.read.parquet(events))
+      assert(ours.getClass == spark0.getClass && ours.getMessage == spark0.getMessage)
+    }
+  }
+
+  test("parquet: an empty directory and a missing path fail as spark.read.parquet does") {
+    val empty = tmpDir
+    for (p <- Seq(empty, s"$empty/absent")) {
+      val ours = intercept[Exception](Readers.parquet(spark, p))
+      val spark0 = intercept[Exception](spark.read.parquet(p))
+      assert(ours.getClass == spark0.getClass && ours.getMessage == spark0.getMessage)
+    }
+  }
+
+  test("parquet: a streaming sink's output reads the files its log names, with no Spark job") {
+    import spark.implicits._
+    val root = tmpDir
+    Seq((1L, "a"), (2L, "b")).toDF("id", "name").write.parquet(s"$root/src")
+    val q = spark.readStream.schema(spark.read.parquet(s"$root/src").schema)
+      .parquet(s"$root/src").writeStream.format("parquet")
+      .option("path", s"$root/out").option("checkpointLocation", s"$root/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(new java.io.File(s"$root/out/_spark_metadata").isDirectory)
+    assert(parquetParity(s"$root/out") == 0)
+    // a file the log does not name (a failed attempt's leftover) sorts
+    // first and has another schema: neither read may take it
+    Seq(9.5).toDF("stray").coalesce(1).write.parquet(s"$root/stray")
+    Files.copy(partFile(s"$root/stray"), java.nio.file.Paths.get(s"$root/out/part-0.parquet"))
+    assert(parquetParity(s"$root/out") == 0)
+    assert(Readers.parquet(spark, s"$root/out").columns.toSeq == Seq("id", "name"))
+  }
 }
