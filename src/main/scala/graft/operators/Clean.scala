@@ -72,18 +72,9 @@ object Clean {
   }
 
   /** The full clean pipeline in reference order: rename -> drop-all-null ->
-    * dedup -> trim (reference: transform.py:85-118). With `nonEmpty`, the
-    * P5 guard ([[requireNonEmpty]], that context) runs on the rows left
-    * after drop-all-null: dedup keeps a row of any non-empty input and
-    * trim is a 1:1 projection, so it decides as a probe of the cleaned
-    * frame would, and is a limit-1 scan by construction rather than by
-    * the optimizer pushing the limit through the dedup. */
-  def clean(renames: Map[String, String] = Map.empty,
-            nonEmpty: Option[String] = None)(df: DataFrame): DataFrame = {
-    val kept = dropAllNullRows(renameColumns(renames)(df))
-    nonEmpty.foreach(requireNonEmpty(kept, _))
-    trimStrings(dedupExact(kept))
-  }
+    * dedup -> trim (reference: transform.py:85-118). */
+  def clean(renames: Map[String, String] = Map.empty)(df: DataFrame): DataFrame =
+    trimStrings(dedupExact(dropAllNullRows(renameColumns(renames)(df))))
 
   /** Consistent pseudonymization for export: each listed column is
     * replaced by hex sha256(secret ‖ value) — one value always maps to

@@ -168,7 +168,8 @@ object Pipeline {
           && stagedAtStart.contains(src.name)) cleanM.skipped += 1
       else attempt(cleanM, retries) {
         val raw = Readers.parquet(spark, s"$root/raw/${src.name}")
-        val cleaned = Clean.clean(src.renames, nonEmpty = Some(src.name))(raw)
+        val cleaned = Clean.requireNonEmpty(
+          Clean.clean(src.renames)(raw), src.name)
         TableStore.writeParquet(cleaned, s"$stagingRoot/${src.name}")
       }
     }

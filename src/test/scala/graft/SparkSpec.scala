@@ -15,31 +15,17 @@ trait SparkSpec extends AnyFunSuite {
     * asynchronously but in order, so the count is read once a marker job
     * run after `body` has been seen. */
   def countJobs[T](body: => T): (T, Int) = {
-    val (out, jobs, _) = jobStats(body)
-    (out, jobs)
-  }
-
-  /** [[countJobs]], plus the shuffle bytes the counted jobs' stages
-    * wrote (a stage completes before its job ends, so before the
-    * marker job starts). */
-  def jobStats[T](body: => T): (T, Int, Long) = {
     val sc = spark.sparkContext
     val group = s"count-jobs-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(); j.stageIds.foreach(stages.add)
+          case Some(`group`) => jobs.incrementAndGet(); ()
           case Some(g) if g == s"$group-marker" => marker.countDown()
           case _ => ()
         }
-      override def onStageCompleted(st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stages.contains(st.stageInfo.stageId))
-          Option(st.stageInfo.taskMetrics).foreach(m =>
-            shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     sc.addSparkListener(listener)
     try {
@@ -48,7 +34,7 @@ trait SparkSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "marker job event never arrived")
-      (out, jobs.get(), shuffled.get())
+      (out, jobs.get())
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -55,19 +55,13 @@ class CleanSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Clean.requireNonEmpty(empty) }
   }
 
-  test("clean's non-empty guard probes before the dedup: no shuffle, all-duplicate input passes, all-null fails") {
-    val dir = java.nio.file.Files.createTempDirectory("clean-guard").toString
-    Seq.fill(200)(("  a ", "b")).toDF("x", "y").repartition(4).write.parquet(s"$dir/dups")
-    val dups = spark.read.parquet(s"$dir/dups")
-    val (out, jobs, shuffled) = jobStats(Clean.clean(nonEmpty = Some("dups"))(dups))
-    assert(jobs >= 1, "the guard must probe at construction")
-    assert(shuffled == 0L, s"the probe wrote $shuffled shuffle bytes")
-    // the listener does see a dedup's shuffle when one runs
-    assert(jobStats(dups.dropDuplicates().collect())._3 > 0L)
+  test("requireNonEmpty after clean: all-duplicate input passes, all-null input fails") {
+    val dups = Seq.fill(200)(("  a ", "b")).toDF("x", "y").repartition(4)
+    val out = Clean.requireNonEmpty(Clean.clean()(dups), "dups")
     assert(out.collect().map(_.toString).toSeq == Seq("[a,b]"))
-    Seq[(String, String)]((null, null), (null, null)).toDF("x", "y").write.parquet(s"$dir/nulls")
+    val nulls = Seq[(String, String)]((null, null), (null, null)).toDF("x", "y")
     val e = intercept[IllegalArgumentException] {
-      Clean.clean(nonEmpty = Some("nulls"))(spark.read.parquet(s"$dir/nulls"))
+      Clean.requireNonEmpty(Clean.clean()(nulls), "nulls")
     }
     assert(e.getMessage.contains("[nulls] DataFrame is empty after cleaning"))
   }

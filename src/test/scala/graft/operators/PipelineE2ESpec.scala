@@ -119,8 +119,7 @@ class PipelineE2ESpec extends SparkSpec {
     assert(spark.table("fact_call_logs").select("call_id").as[String]
       .collect().toSet == Set("k1", "k2"))
     // one ledger lookup, no dead transforms, reads of loaded folders
-    // only, no schema-inference job per read, no dedup shuffle in the
-    // non-empty probe
+    // only, no schema-inference job per read
     assert(jobs2 <= 19, s"re-run launched $jobs2 Spark jobs, pinned at 19")
   }
 
