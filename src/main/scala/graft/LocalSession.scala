@@ -19,7 +19,7 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     // The registry's global windows all run on provably bounded inputs
     // (post-rollup day/vocab/group-sized relations, audited query by
-    // query in GlobalWindowAuditSpec, which fails if a new global window
+    // query in RegistryContractSpec, which fails if a new global window
     // appears outside its allowlist). At WARN each occurrence still
     // prints "No Partition Defined! Moving all data to a single
     // partition": hundreds of lines that drown the output tail. Silenced

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * `Window.orderBy(...)` with no partition moves the whole relation
   * through one task — fine for the post-rollup day/vocab-sized
   * relations most of this repo's global windows run on (audited in
-  * GlobalWindowAuditSpec), a scale bug for anything keys-sized: a
+  * RegistryContractSpec), a scale bug for anything keys-sized: a
   * customer or part rollup at 100 TB is 10^8-10^9 rows, and one task
   * sorting 10^9 rows is the plan that never finishes. This operator is
   * the two-pass parallel scan instead (the classic distributed
@@ -49,10 +49,9 @@ import org.apache.spark.sql.functions._
   *
   *  1. STATS PRE-GATE (round 15, zero-cost): if the optimizer's size
   *     estimate (`optimizedPlan.stats.sizeInBytes`, rooted in actual
-  *     file bytes at the scans) is at or below
-  *     `spark.graft.globalrank.maxSinglePartitionBytes` (default 2^26;
-  *     0 disables), return the plain single-partition window form with
-  *     NO persist and NO counting job — the exact pre-round-14 plan.
+  *     file bytes at the scans) is at or below 64 MB (2^26 bytes),
+  *     return the plain single-partition window form with NO persist
+  *     and NO counting job — the exact pre-round-14 plan.
   *     This is safe because Spark's size-only stats propagation never
   *     shrinks an estimate below the scanned bytes except by column-
   *     width ratios, LIMIT and SAMPLE (Filter, Aggregate and Join keep
@@ -102,18 +101,15 @@ object GlobalRank {
     * true when the optimizer's size estimate — rooted in real file
     * bytes at the scans, and never shrunk below them by the size-only
     * propagation rules except via width ratios / LIMIT / SAMPLE — says
-    * the relation is comfortably one-task-sortable. Disabled whenever
-    * the row gate is 0 (the specs' force-distributed switch must win)
-    * or the bytes gate is set to 0, and for any plan with a Generate,
-    * whose estimate does not grow with its rows. */
+    * the relation is comfortably one-task-sortable (≤ 64 MB). Disabled
+    * whenever the row gate is 0 (the specs' force-distributed switch
+    * must win), and for any plan with a Generate, whose estimate does
+    * not grow with its rows. */
   private def statsSmall(df: DataFrame): Boolean = {
     if (smallLimit(df) <= 0) return false
-    val maxBytes = df.sparkSession.conf
-      .get("spark.graft.globalrank.maxSinglePartitionBytes",
-        (1L << 26).toString).toLong
     val plan = df.queryExecution.optimizedPlan
-    maxBytes > 0 && plan.find(_.isInstanceOf[Generate]).isEmpty &&
-      plan.stats.sizeInBytes <= BigInt(maxBytes)
+    plan.find(_.isInstanceOf[Generate]).isEmpty &&
+      plan.stats.sizeInBytes <= BigInt(1L << 26)
   }
 
   /** Persist the input and measure it: the count both drives the

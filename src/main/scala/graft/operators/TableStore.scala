@@ -107,19 +107,13 @@ object TableStore {
     *
     * At scale, partition pruning on the written layout is what makes
     * day-ranged scans cheap: `WHERE day = X` reads one directory. The
-    * overwrite-mode conf is set on the session — scoped here because
-    * the write is the only consumer, restored after. */
+    * overwrite-mode conf is set on the session, scoped to the write. */
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "writePartitioned needs partition columns")
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    graft.SessionConf.scoped(df.sparkSession,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
     }
   }
 }

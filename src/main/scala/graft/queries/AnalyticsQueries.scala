@@ -2284,9 +2284,7 @@ object AnalyticsQueries {
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val (lt, ot) = bucketedTables(s, dir)
-      val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.SessionConf.scoped(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val out = s.table(lt)
           .join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderpriority")
@@ -2301,7 +2299,7 @@ object AnalyticsQueries {
         val rows = out.collect()
         s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1),
           out.schema)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      }
     },
 
     // Weighted shortest paths (Graph.shortestPaths): 3 Bellman-Ford
@@ -2397,13 +2395,10 @@ object AnalyticsQueries {
          FROM orders JOIN lineitem ON o_orderkey = l_orderkey
          WHERE o_orderpriority = '1-URGENT'
          GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-      val scoped = Seq(
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-      val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      graft.SessionConf.scoped(s,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
         val out = t(s, dir, "orders")
           .filter(col("o_orderpriority") === "1-URGENT")
           .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
@@ -2418,8 +2413,7 @@ object AnalyticsQueries {
         val rows = out.collect()
         s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1),
           out.schema)
-      } finally prev.foreach { case (k, vOpt) =>
-        vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v)) }
+      }
     },
 
     // RFM customer segmentation (Events.rfmSegments): recency /

@@ -45,23 +45,13 @@ object StreamingParityQueries {
   private def tmpDir(prefix: String): String = scratchDir(prefix)
 
   /** Streaming read of a driver test table with queries.t()'s ts
-    * normalization (TESTDATA nanos/NTZ forms) applied on the stream.
+    * normalization (TIMESTAMP_NTZ to TIMESTAMP) applied on the stream.
     * The file-stream source requires a DIRECTORY (a bare file path
     * fails with "basePath must be a directory"), so the source is the
     * sf dir with a pathGlobFilter narrowing to this table's file. */
-  private def tStream(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Readers.parquet(s, s"$dir/$name.parquet").schema
-    val df = s.readStream.schema(schema)
-      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
-    schema.fields.find(_.name == "ts").map(_.dataType) match {
-      case Some(org.apache.spark.sql.types.LongType) =>
-        df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case Some(org.apache.spark.sql.types.TimestampNTZType) =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
-  }
+  private def tStream(s: SparkSession, dir: String, name: String): DataFrame =
+    ntzTsAsTimestamp(s.readStream.schema(Readers.parquet(s, s"$dir/$name.parquet").schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir))
 
   /** Drain a streaming DataFrame to a fresh parquet dir (AvailableNow,
     * append) and hand back the landed result as a batch DataFrame. */

@@ -15,29 +15,22 @@ package object queries {
 
   /** Load a driver test table (TESTDATA.md): `$dir/<name>.parquet`.
     *
-    * The `events.ts` column has shipped in two physical forms across
-    * driver rounds, both normalized here to a session-zone TIMESTAMP so
-    * every downstream query sees ONE type:
-    *   - TIMESTAMP(NANOS) (rounds ≤5): Spark's vectorized reader
-    *     rejects it; read nanos as long and convert with integer
-    *     division (`DIV`, not `/` — double division loses ~200ns at
-    *     epoch-nanos magnitude, enough to shift microsecond values).
-    *   - timestamp[us] without UTC adjustment (round 6 regen): arrives
-    *     as TIMESTAMP_NTZ, which unix_micros()/double casts reject;
-    *     cast to TIMESTAMP — the session zone is pinned UTC everywhere
-    *     (Verify/Bench/tests), so the wall-clock reinterpretation is
-    *     value-identical and matches DuckDB's naive reading. */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = Readers.parquet(spark, s"$dir/$name.parquet")
-    df.schema.fields.find(_.name == "ts").map(_.dataType) match {
-      case Some(org.apache.spark.sql.types.LongType) =>
-        df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case Some(org.apache.spark.sql.types.TimestampNTZType) =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
-  }
+    * `events.ts` is timestamp[us] without UTC adjustment, which arrives
+    * as TIMESTAMP_NTZ; unix_micros()/double casts reject it, so it is
+    * cast to TIMESTAMP here and every downstream query sees ONE type.
+    * The session zone is pinned UTC everywhere (Verify/Bench/tests), so
+    * the wall-clock reinterpretation is value-identical and matches
+    * DuckDB's naive reading. A TIMESTAMP(NANOS) column fails the read
+    * as it does in Spark. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    ntzTsAsTimestamp(Readers.parquet(spark, s"$dir/$name.parquet"))
+
+  /** [[t]]'s `ts` normalization, shared with the streaming reads. */
+  private[queries] def ntzTsAsTimestamp(df: DataFrame): DataFrame =
+    if (df.schema.exists(f => f.name == "ts" &&
+        f.dataType == org.apache.spark.sql.types.TimestampNTZType))
+      df.withColumn("ts", col("ts").cast("timestamp"))
+    else df
 
   private val tempDirReg =
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[java.io.File]]

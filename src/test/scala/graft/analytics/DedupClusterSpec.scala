@@ -114,15 +114,14 @@ class DedupClusterSpec extends SparkSpec {
   }
 
   test("incrementalComponents without the broadcast hint: identical result") {
-    spark.conf.set("graft.dedup.incrementalBroadcastHint", "false")
-    try {
+    graft.SessionConf.scoped(spark, "graft.dedup.incrementalBroadcastHint" -> "false") {
       val stored = Seq((5L, 5L), (6L, 5L), (10L, 10L)).toDF("id", "comp")
       val newE = Seq((2L, 6L), (50L, 51L)).toDF("id_a", "id_b")
       val got = Dedup.incrementalComponents(stored, newE)
         .as[(Long, Long)].collect().toMap
       assert(got == Map(5L -> 2L, 6L -> 2L, 10L -> 10L,
         2L -> 2L, 50L -> 50L, 51L -> 50L))
-    } finally spark.conf.unset("graft.dedup.incrementalBroadcastHint")
+    }
   }
 
   test("dedupVerdicts: unpaired docs survive as their own component") {

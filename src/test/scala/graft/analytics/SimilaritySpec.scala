@@ -66,19 +66,10 @@ class SimilaritySpec extends SparkSpec {
   test("topKIvf construction triggers no Spark jobs (no driver-side corpus pass)") {
     val e = embeddings
     e.schema // force the parquet footer read before counting jobs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = Similarity.topKIvf(e, "vec_id", "embedding",
-        e.filter($"vec_id" === 7), k = 10)
-      Thread.sleep(500) // listener events post asynchronously
-      assert(jobs.get() == 0, "building the IVF plan must not run jobs")
-      assert(df.columns.toSeq == Seq("id", "cosine"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (df, jobs) = countJobs(Similarity.topKIvf(e, "vec_id", "embedding",
+      e.filter($"vec_id" === 7), k = 10))
+    assert(jobs == 0, "building the IVF plan must not run jobs")
+    assert(df.columns.toSeq == Seq("id", "cosine"))
   }
 
   test("batch top-k: per-query results match single-query brute force; LSH recall > 0") {

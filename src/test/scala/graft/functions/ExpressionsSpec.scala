@@ -224,11 +224,9 @@ class ExpressionsSpec extends SparkSpec {
     // expression's code so even fixed names were verified not to
     // collide, but that is an implementation detail this test would
     // catch changing.
-    val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    graft.SessionConf.scoped(spark,
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false") {
       import org.apache.spark.sql.functions.{lit, array}
       // non-nullable, non-foldable inputs: the shape with the least
       // scoping/folding between the two instances
@@ -242,15 +240,6 @@ class ExpressionsSpec extends SparkSpec {
           array(x + 4, lit(6L)), array(lit(7L), lit(8L))).as("d2")).head()
       assert(r.getLong(2) == 11L && r.getLong(3) == 83L)
       assert(r.getLong(0) != r.getLong(1))
-    } finally {
-      prevFactory match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
-        case None => spark.conf.unset("spark.sql.codegen.factoryMode")
-      }
-      prevFallback match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-        case None => spark.conf.unset("spark.sql.codegen.fallback")
-      }
     }
   }
 }

@@ -22,11 +22,8 @@ class GlobalRankSpec extends SparkSpec {
     * force it regardless of input size (the adaptive gate would
     * otherwise route these rollup-sized fixtures to the plain window
     * form and the tests would compare a window with itself). */
-  private def forceDistributed[T](body: => T): T = {
-    spark.conf.set("spark.graft.globalrank.maxSinglePartitionRows", "0")
-    try body
-    finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionRows")
-  }
+  private def forceDistributed[T](body: => T): T =
+    graft.SessionConf.scoped(spark, "spark.graft.globalrank.maxSinglePartitionRows" -> "0")(body)
 
   test("rowNumber equals the single-partition window row_number across range boundaries") { forceDistributed {
     val sort = Seq(col("v"), col("id"))
@@ -139,64 +136,41 @@ class GlobalRankSpec extends SparkSpec {
   test("stats pre-gate: a provably tiny input takes the window form with no persist and no counting job") {
     // LocalRelation/range stats are exact and tiny — the pre-gate must
     // fire, so the returned plan is the PLAIN window over the input:
-    // no InMemoryRelation (no persist), and no count() job ran (jobs
-    // counted via a listener)
+    // no InMemoryRelation (no persist), and no count() job ran
     // earlier tests' pinned persists would otherwise be substituted
     // into this plan by the CacheManager and read as a false persist
     spark.catalog.clearCache()
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    val (out, jobs) = countJobs(GlobalRank.ntile(data, 5, Seq(col("v"), col("id")), "t"))
+    assert(jobs == 0,
+      s"stats pre-gate must not launch a dispatch job (ran $jobs)")
+    assert(!out.queryExecution.executedPlan.toString.contains("InMemoryRelation")
+        && !out.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
+      "pre-gated small path must not persist its input")
+    // an exploded input keeps its child's tiny byte estimate while its
+    // rows multiply (10 -> 1000): the pre-gate must decline it, so the
+    // measured count gate runs (one persist + count job); at the default
+    // row gate it still picks the window form, over the pinned input
+    val exploded = spark.range(10)
+      .select(explode(sequence(lit(1L), lit(100L))).as("k"), $"id")
+      .select(($"id" * 100L + $"k").as("id"), pmod($"k", lit(7L)).as("v"))
+    val (out2, jobs2) = countJobs(GlobalRank.ntile(exploded, 5, Seq(col("v"), col("id")), "t"))
+    assert(jobs2 > 0, "an exploded input must go to the measured count gate")
+    val plan2 = out2.queryExecution.executedPlan.toString
+    assert(plan2.contains("InMemoryTableScan"),
+      "count-gated small path reads the pinned input")
+    assert(!plan2.contains("__gr_pid"),
+      "1000 rows under the default row gate must take the window form")
+    // with the row gate below 1000, the count gate takes the distributed
+    // plan instead of the single-partition window
+    spark.catalog.clearCache()
+    graft.SessionConf.scoped(spark, "spark.graft.globalrank.maxSinglePartitionRows" -> "500") {
+      val (out3, jobs3) = countJobs(GlobalRank.ntile(exploded, 5, Seq(col("v"), col("id")), "t"))
+      assert(jobs3 > 0,
+        "an exploded input must go to the measured count gate")
+      assert(out3.queryExecution.executedPlan.toString.contains("__gr_pid"),
+        "1000 rows over a 500-row gate must take the distributed plan")
+      assert(out3.count() == 1000)
     }
-    sc.addSparkListener(listener)
-    try {
-      val out = GlobalRank.ntile(data, 5, Seq(col("v"), col("id")), "t")
-      Thread.sleep(500) // job-start events are delivered async
-      assert(jobs.get() == 0,
-        s"stats pre-gate must not launch a dispatch job (ran ${jobs.get()})")
-      assert(!out.queryExecution.executedPlan.toString.contains("InMemoryRelation")
-          && !out.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
-        "pre-gated small path must not persist its input")
-      // the bytes gate alone can be disabled: the measured-count gate
-      // then runs (one persist + count job) and still picks the window form
-      spark.conf.set("spark.graft.globalrank.maxSinglePartitionBytes", "0")
-      try {
-        val out2 = GlobalRank.ntile(data, 5, Seq(col("v"), col("id")), "t")
-        val deadline = System.currentTimeMillis() + 10000
-        while (jobs.get() == 0 && System.currentTimeMillis() < deadline)
-          Thread.sleep(50)
-        assert(jobs.get() > 0,
-          "with the bytes gate off, the measured count gate must run its job")
-        assert(out2.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
-          "count-gated small path reads the pinned input")
-      } finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionBytes")
-      // an exploded input keeps its child's tiny byte estimate while its
-      // rows multiply (10 -> 1000): the pre-gate must decline it, so the
-      // count gate runs and, with the row gate below 1000, the
-      // distributed plan is taken instead of the single-partition window
-      val exploded = spark.range(10)
-        .select(explode(sequence(lit(1L), lit(100L))).as("k"), $"id")
-        .select(($"id" * 100L + $"k").as("id"), pmod($"k", lit(7L)).as("v"))
-      spark.catalog.clearCache()
-      Thread.sleep(500)
-      jobs.set(0)
-      spark.conf.set("spark.graft.globalrank.maxSinglePartitionRows", "500")
-      try {
-        val out3 = GlobalRank.ntile(exploded, 5, Seq(col("v"), col("id")), "t")
-        val deadline = System.currentTimeMillis() + 10000
-        while (jobs.get() == 0 && System.currentTimeMillis() < deadline)
-          Thread.sleep(50)
-        assert(jobs.get() > 0,
-          "an exploded input must go to the measured count gate")
-        assert(out3.queryExecution.executedPlan.toString.contains("__gr_pid"),
-          "1000 rows over a 500-row gate must take the distributed plan")
-        assert(out3.count() == 1000)
-      } finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionRows")
-    } finally sc.removeSparkListener(listener)
   }
 
   test("adaptive dispatch: rowNumber and prefix-sum small paths match the window forms (types included)") {

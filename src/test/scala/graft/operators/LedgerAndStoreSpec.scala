@@ -24,10 +24,9 @@ class LedgerAndStoreSpec extends SparkSpec {
     // zero the size threshold (hint dropped) AND disable the planner's
     // own auto-broadcast, so the fallback really is the shuffled
     // left_anti a lake-lifetime ledger would get
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("graft.ledger.broadcastMaxBytes", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    graft.SessionConf.scoped(spark,
+        "graft.ledger.broadcastMaxBytes" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = FileLedger.newFiles(cand, ledger)
       val out = df.as[(String, String)].collect().toSet
       assert(out == Set(("a", "f2"), ("b", "f1")))
@@ -36,9 +35,6 @@ class LedgerAndStoreSpec extends SparkSpec {
         && !plan.contains("BroadcastNestedLoopJoin"),
         s"oversized ledger must not broadcast:\n$plan")
       assert(plan.contains("LeftAnti"), s"expected an anti-join:\n$plan")
-    } finally {
-      spark.conf.unset("graft.ledger.broadcastMaxBytes")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
     }
   }
 

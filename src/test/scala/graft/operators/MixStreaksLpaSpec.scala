@@ -79,10 +79,11 @@ class MixStreaksLpaSpec extends SparkSpec {
     // scale contract) when the input exceeds GlobalRank's size gate —
     // force the gate to 0 to pin the at-scale plan (the 5-row fixture
     // would otherwise take the bit-identical window form)
-    spark.conf.set("spark.graft.globalrank.maxSinglePartitionRows", "0")
-    val plan = try Reconcile.sortedNeighborhoodPairs(names, "id", "nm", 3, 2)
+    val plan = graft.SessionConf.scoped(spark,
+        "spark.graft.globalrank.maxSinglePartitionRows" -> "0") {
+      Reconcile.sortedNeighborhoodPairs(names, "id", "nm", 3, 2)
         .queryExecution.executedPlan.toString
-      finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionRows")
+    }
     assert(plan.contains("__gr_pid"),
       "rank must come from the pid-partitioned prefix sum (GlobalRank)")
   }

@@ -18,16 +18,14 @@ class ScaleShapeSpec extends SparkSpec {
       .write.bucketBy(8, "k").sortBy("k").saveAsTable(ta)
     (1L to 10000L).map(i => (i, i * 2.0)).toDF("k", "vb")
       .write.bucketBy(8, "k").sortBy("k").saveAsTable(tb)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    graft.SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table(ta).join(spark.table(tb), Seq("k"))
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"bucketed join must not shuffle:\n$plan")
       assert(joined.count() == 10000)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("contamination semi-join broadcasts the small benchmark side at runtime") {
@@ -81,23 +79,14 @@ class ScaleShapeSpec extends SparkSpec {
     // complements saltedAgg/saltedEquiJoin (the plan-level skew fixes):
     // AQE's runtime skew split is the zero-code path, and this pins
     // that our conf surface actually triggers it on a hot key
-    val prev = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.coalescePartitions.enabled"
-    ).map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32768")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16384")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    graft.SessionConf.scoped(spark,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32768",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       // 200k rows, 95% on one key, joined to a small-but-not-broadcast dim
       val big = spark.range(200000).select(
         when($"id" % 20 === 0, $"id" % 50).otherwise(lit(7L)).as("k"),
@@ -110,9 +99,7 @@ class ScaleShapeSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skewed join:\n${plan.take(4000)}")
-    } finally prev.foreach { case (k, v) =>
-      v match { case Some(x) => spark.conf.set(k, x)
-                case None => spark.conf.unset(k) } }
+    }
   }
 
   test("z-order clustering bounds BOTH dimensions per bucket; single sort does not") {
@@ -256,10 +243,10 @@ class ScaleShapeSpec extends SparkSpec {
     val df = (1L to 5000L).map(i => (i % 997, i % 3 == 0)).toDF("score", "pos")
     // force GlobalRank's distributed path: the 997-row rollup fixture
     // would take the bit-identical window form under the default gate
-    spark.conf.set("spark.graft.globalrank.maxSinglePartitionRows", "0")
-    val p = try Stats.rankAuc(df, "score", "pos")
-        .queryExecution.executedPlan.toString
-      finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionRows")
+    val p = graft.SessionConf.scoped(spark,
+        "spark.graft.globalrank.maxSinglePartitionRows" -> "0") {
+      Stats.rankAuc(df, "score", "pos").queryExecution.executedPlan.toString
+    }
     assert(p.contains("rangepartitioning"),
       s"expected repartitionByRange prefix machinery:\n$p")
     // every window in the plan must carry a partition key (__pid) — a

@@ -146,9 +146,7 @@ class StarSchemaQualitySpec extends SparkSpec {
   }
 
   test("cmsFrequencies: never undercounts, overcount bounded by eps*N") {
-    // events carries TIMESTAMP(NANOS) — must go through t()'s
-    // nanosAsLong handling (a bare read only works if another suite
-    // already set the conf on the shared session: order-dependent red)
+    // read through t(), as the registry queries read events
     val ev = graft.queries.t(spark, "/root/testdata/sf0.001", "events")
       .select("event_type")
     val exact = ev.groupBy("event_type").count()

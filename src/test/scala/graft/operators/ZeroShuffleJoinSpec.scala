@@ -14,10 +14,8 @@ class ZeroShuffleJoinSpec extends SparkSpec {
     TableStore.writeBucketed(orders, "bkt_orders", "o_custkey", 8)
     TableStore.writeBucketed(customer, "bkt_customer", "c_custkey", 8)
     try {
-      val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       // disable broadcast so the join MUST pick a shuffle-or-bucket path
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      graft.SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = spark.table("bkt_orders")
           .join(spark.table("bkt_customer"),
             col("o_custkey") === col("c_custkey"))
@@ -28,8 +26,6 @@ class ZeroShuffleJoinSpec extends SparkSpec {
         val expected = orders.join(customer,
           col("o_custkey") === col("c_custkey"))
         assert(joined.count() == expected.count())
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       }
     } finally {
       spark.sql("DROP TABLE IF EXISTS bkt_orders")

@@ -164,12 +164,11 @@ class PlanSpec extends SparkSpec {
   test("q66: packing windows are per-partition, offsets broadcast (distributed path forced)") {
     // GlobalRank's size gate would route the sf0.001 fixture to the
     // single-partition window form (bit-identical, audited in
-    // GlobalWindowAuditSpec); pin the at-scale DISTRIBUTED shape by
+    // RegistryContractSpec); pin the at-scale DISTRIBUTED shape by
     // forcing the gate to 0 — this is the plan a corpus-sized input
     // takes.
-    spark.conf.set("spark.graft.globalrank.maxSinglePartitionRows", "0")
-    val p = try planOf("q66_pack_sequences")
-      finally spark.conf.unset("spark.graft.globalrank.maxSinglePartitionRows")
+    val p = graft.SessionConf.scoped(spark,
+      "spark.graft.globalrank.maxSinglePartitionRows" -> "0")(planOf("q66_pack_sequences"))
     // the per-partition running sum must be partitioned by __pid, and the
     // only global (empty-partition-spec) window may run over the tiny
     // per-partition offsets relation, never the corpus
@@ -379,12 +378,5 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Window"), s"no window needed:\n$p")
     val joins = "Join".r.findAllIn(p).size
     assert(joins == 0, s"no join expected:\n$p")
-  }
-
-  test("every registered query has a resolvable, executable plan") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.queryExecution.executedPlan != null, s"$name failed to plan")
-    }
   }
 }

@@ -164,12 +164,6 @@ class ReadersSpec extends SparkSpec {
     parts.head.toPath
   }
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   /** A directory of two single-file parts with drifted schemas: `name1`
     * holds (id, a), `name2` holds (id, a, extra). */
   private def driftedDir(name1: String, name2: String): String = {
@@ -215,7 +209,7 @@ class ReadersSpec extends SparkSpec {
 
   test("parquet: spark.sql.parquet.mergeSchema on falls back to Spark's merged schema") {
     val dir = driftedDir("part-a.parquet", "part-b.parquet")
-    withConf("spark.sql.parquet.mergeSchema", "true") {
+    graft.SessionConf.scoped(spark, "spark.sql.parquet.mergeSchema" -> "true") {
       assert(org.apache.spark.sql.graftshim.Shim.parquetSchema(spark, dir).isEmpty)
       parquetParity(dir)
       assert(Readers.parquet(spark, dir).columns.toSeq == Seq("id", "a", "extra"))
@@ -255,11 +249,11 @@ class ReadersSpec extends SparkSpec {
 
   test("parquet: TIMESTAMP(NANOS) follows spark.sql.legacy.parquet.nanosAsLong") {
     val events = nanosFile()
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+    graft.SessionConf.scoped(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       assert(parquetParity(events) == 0)
       assert(Readers.parquet(spark, events).schema("ts").dataType == LongType)
     }
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+    graft.SessionConf.scoped(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "false") {
       val ours = intercept[Exception](Readers.parquet(spark, events))
       val spark0 = intercept[Exception](spark.read.parquet(events))
       assert(ours.getClass == spark0.getClass && ours.getMessage == spark0.getMessage)

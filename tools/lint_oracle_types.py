@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Lint the ORACLE side of the output-type contract.
 
-The Scala OutputContractSpec pins the Spark output schemas to the
+The Scala RegistryContractSpec pins the Spark output schemas to the
 driver envelope (string/long/int/double/date/timestamp/boolean). This
 tool pins the DuckDB side: DESCRIBE each oracle query (plans only, no
 execution) and fail on any output column whose type leaves the
