@@ -40,8 +40,7 @@ object FileLedger {
   val Schema = "folder_name STRING, file_name STRING, loaded_at TIMESTAMP"
 
   /** Past this estimated ledger size the broadcast hint is dropped and
-    * AQE chooses the anti-join strategy. Overridable per session via
-    * `graft.ledger.broadcastMaxBytes` (runtime conf). */
+    * AQE chooses the anti-join strategy. */
   val BroadcastMaxBytes: Long = 64L << 20
 
   /** Read the ledger with its declared [[Schema]] (the ledger is only
@@ -63,24 +62,31 @@ object FileLedger {
     * metadata, no job) stays under the threshold; a lake-lifetime
     * ledger past it degrades to a hintless join AQE plans from runtime
     * size, instead of force-broadcasting 10⁸ rows through the driver. */
-  def newFiles(candidates: DataFrame, ledger: DataFrame): DataFrame = {
+  def newFiles(candidates: DataFrame, ledger: DataFrame): DataFrame =
+    newFiles(candidates, ledger, BroadcastMaxBytes)
+
+  private[operators] def newFiles(candidates: DataFrame, ledger: DataFrame,
+                                  maxBytes: Long): DataFrame = {
     val keys = ledger.select("folder_name", "file_name")
-    val maxBytes = ledger.sparkSession.conf
-      .get("graft.ledger.broadcastMaxBytes", BroadcastMaxBytes.toString).toLong
     val est = keys.queryExecution.optimizedPlan.stats.sizeInBytes
     val side = if (est <= maxBytes) broadcast(keys) else keys
     candidates.join(side, Seq("folder_name", "file_name"), "left_anti")
   }
 
   /** K4: append processed (folder, file) pairs with a load timestamp
-    * (reference: snowflake_load.py:123-133 + `LOADED_AT` default :68). */
+    * (reference: snowflake_load.py:123-133 + `LOADED_AT` default :68).
+    * Appends never overlap: concurrent append jobs on one directory share
+    * its `_temporary/0` folder, and the first to commit deletes it under
+    * the others. */
   def append(spark: SparkSession, ledgerPath: String,
-             entries: Seq[(String, String)]): Unit = {
+             entries: Seq[(String, String)]): Unit = AppendLock.synchronized {
     import spark.implicits._
     entries.toDF("folder_name", "file_name")
       .withColumn("loaded_at", current_timestamp())
       .write.mode("append").parquet(ledgerPath)
   }
+
+  private object AppendLock
 
   /** Driver-side lookup used by the orchestrator: which of the
     * candidate (folder, file) `pairs` are unprocessed, sorted. All pairs,

@@ -50,13 +50,19 @@ object Quality {
       durationSeconds: Double, retried: Long = 0L)
 
   /** Time a stage and produce its report; counters supplied by the stage
-    * body via the returned builder. */
+    * body via the returned builder. The counters are atomic: a stage's
+    * units may report from several threads at once. */
   final class MetricsBuilder(operation: String) {
+    import java.util.concurrent.atomic.AtomicLong
     private val t0 = System.nanoTime()
-    var processed, succeeded, failed, skipped, retried = 0L
+    private val processed, succeeded, failed, skipped, retried = new AtomicLong
+    def succeed(): Unit = { processed.incrementAndGet(); succeeded.incrementAndGet() }
+    def fail(): Unit = { processed.incrementAndGet(); failed.incrementAndGet() }
+    def skip(): Unit = { skipped.incrementAndGet(); () }
+    def retry(): Unit = { retried.incrementAndGet(); () }
     def complete(): OperationMetadata =
-      OperationMetadata(operation, processed, succeeded, failed, skipped,
-        (System.nanoTime() - t0) / 1e9, retried)
+      OperationMetadata(operation, processed.get, succeeded.get, failed.get, skipped.get,
+        (System.nanoTime() - t0) / 1e9, retried.get)
   }
 
   def timed(operation: String): MetricsBuilder = new MetricsBuilder(operation)

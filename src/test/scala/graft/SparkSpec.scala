@@ -1,13 +1,25 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
-  * getOrCreate returns the same one; suites must not stop() it). */
-trait SparkSpec extends AnyFunSuite {
+  * getOrCreate returns the same one; suites must not stop() it). A
+  * suite leaves the session as later suites expect to find it: its
+  * cached data and its session temp views are dropped when it ends, so a
+  * stale persist cannot stand in for a later query's plan and a stale
+  * view cannot shadow a later suite's table of the same name. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf = "/root/testdata/sf0.001"
+
+  override protected def afterAll(): Unit =
+    try SparkSession.getDefaultSession.foreach { s =>
+      s.catalog.clearCache()
+      s.catalog.listTables().collect().filter(_.isTemporary)
+        .foreach(t => s.catalog.dropTempView(t.name))
+    } finally super.afterAll()
 
   /** Runs `body` and counts the Spark jobs it launched. Jobs are told
     * apart by a job group set on this thread (Spark carries it to the

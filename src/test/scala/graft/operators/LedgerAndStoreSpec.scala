@@ -24,10 +24,8 @@ class LedgerAndStoreSpec extends SparkSpec {
     // zero the size threshold (hint dropped) AND disable the planner's
     // own auto-broadcast, so the fallback really is the shuffled
     // left_anti a lake-lifetime ledger would get
-    graft.SessionConf.scoped(spark,
-        "graft.ledger.broadcastMaxBytes" -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val df = FileLedger.newFiles(cand, ledger)
+    graft.SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = FileLedger.newFiles(cand, ledger, maxBytes = 0L)
       val out = df.as[(String, String)].collect().toSet
       assert(out == Set(("a", "f2"), ("b", "f1")))
       val plan = df.queryExecution.executedPlan.toString

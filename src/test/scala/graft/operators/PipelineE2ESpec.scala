@@ -3,8 +3,10 @@ package graft.operators
 import graft.SparkSpec
 import graft.sources.Readers
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types._
 import java.nio.file.Files
+import java.util.concurrent.{CyclicBarrier, TimeUnit}
 
 /** End-to-end reference-shaped pipeline over synthesized 5-source
   * fixtures (FIXTURES.md §A): messy headers, NULL literals, duplicates,
@@ -119,8 +121,9 @@ class PipelineE2ESpec extends SparkSpec {
     assert(spark.table("fact_call_logs").select("call_id").as[String]
       .collect().toSet == Set("k1", "k2"))
     // one ledger lookup, no dead transforms, reads of loaded folders
-    // only, no schema-inference job per read
-    assert(jobs2 <= 19, s"re-run launched $jobs2 Spark jobs, pinned at 19")
+    // only, no schema-inference job per read; the units' pool threads
+    // carry the caller's job group, so none of their jobs goes uncounted
+    assert(jobs2 == 19, s"re-run launched $jobs2 Spark jobs, pinned at 19")
   }
 
   test("a batch landed but never loaded (crash between land and load) is transformed and loaded on the next run") {
@@ -205,4 +208,87 @@ class PipelineE2ESpec extends SparkSpec {
     assert(ex.getMessage == "permanent outage")
     assert(calls2 == 2, "retries = 1 means exactly two attempts")
   }
+
+  private val idSchema = StructType(Seq(StructField("id", StringType)))
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("a stage's units run concurrently; land and buildStar run on the caller's thread") {
+    val root = Files.createTempDirectory("pipe-concurrent").toString
+    val caller = Thread.currentThread()
+    val callbackThreads = scala.collection.mutable.ArrayBuffer.empty[Thread]
+    val sources = Seq("meet_l", "meet_r").map(n => Pipeline.Source(n, s => {
+      callbackThreads += Thread.currentThread()
+      Readers.rows(s, Seq(Row(n)), idSchema)
+    }))
+    // each model's one row waits for the other model's row: run one
+    // after the other, the first model's wait times out
+    val meet = udf { (id: String) =>
+      PipelineE2ESpec.pair.await(30, TimeUnit.SECONDS); id }
+    val report = Pipeline.run(spark, sources, root, tables => {
+      callbackThreads += Thread.currentThread()
+      tables.map { case (n, df) => s"${n}_model" -> df.select(meet(col("id")).as("id")) }
+    }, retries = 0)
+    assert(callbackThreads.size == 3 && callbackThreads.forall(_ eq caller), callbackThreads)
+    assert(report.stages.forall(_.failed == 0), report.stages)
+    assert(spark.table("meet_l_model").as[String].collect().toSeq == Seq("meet_l"))
+    assert(spark.table("meet_r_model").as[String].collect().toSeq == Seq("meet_r"))
+  }
+
+  test("a failing unit is rethrown once its siblings finish, whose batches and ledger marks exist once") {
+    val root = Files.createTempDirectory("pipe-unit-fail").toString
+    val ledger = s"$root/_ledger"
+    val boom = udf { (id: String) =>
+      if (id.startsWith("bad:")) throw new IllegalStateException(s"bad batch $id"); id }
+    var broken = true
+    def batch(n: String, flaky: Boolean) = Pipeline.Source(n, s =>
+      Readers.rows(s, Seq(Row(if (flaky && broken) s"bad:$n" else n)), idSchema)
+        .select(boom(col("id")).as("id")), incremental = true)
+    val good = Seq("batch_a", "batch_b", "batch_c")
+    val sources = Seq(batch("batch_a", false), batch("batch_x1", true),
+      batch("batch_b", false), batch("batch_x2", true), batch("batch_c", false))
+    def marks = FileLedger.load(spark, ledger).select("folder_name", "file_name")
+      .as[(String, String)].collect().toSeq.sorted
+
+    // two units fail; the first in source order is the one rethrown
+    val e = intercept[Exception](Pipeline.run(spark, sources, root, _ => Map.empty, retries = 0))
+    val messages = causes(e).map(c => String.valueOf(c.getMessage))
+    assert(messages.exists(_.contains("bad batch bad:batch_x1")), messages)
+    assert(!messages.exists(_.contains("batch_x2")), messages)
+    good.foreach(n => assert(spark.read.parquet(s"$root/raw/$n").as[String].collect().toSeq == Seq(n)))
+    assert(marks == good.map(n => (n, s"$n.batch")))
+
+    // the re-run lands only the failed batches; every pair is marked once
+    broken = false
+    val report = Pipeline.run(spark, sources, root, _ => Map.empty, retries = 0)
+    val land = report.stages.head
+    assert(land.skipped == 3 && land.processed == 2 && land.failed == 0, land)
+    val all = sources.map(_.name)
+    all.foreach(n => assert(spark.table(n).as[String].collect().toSeq == Seq(n)))
+    assert(marks == (all.map(n => (n, s"$n.batch")) ++
+      all.map(n => (s"staging/$n", s"$n.parquet"))).sorted)
+    assert(!new java.io.File(s"$ledger/_temporary").exists(), "append left _temporary under _ledger")
+  }
+
+  test("an incremental source listed twice lands once") {
+    val root = Files.createTempDirectory("pipe-twice").toString
+    var landCalls = 0
+    val calls = Pipeline.Source("twice_calls", s => {
+      landCalls += 1
+      Readers.rows(s, Seq(Row("k1"), Row("k2")), idSchema)
+    }, incremental = true)
+    val report = Pipeline.run(spark, Seq(calls, calls), root, _ => Map.empty)
+    val land = report.stages.head
+    assert(landCalls == 1 && land.processed == 1 && land.skipped == 1, land)
+    assert(spark.read.parquet(s"$root/raw/twice_calls").count() == 2)
+    assert(spark.table("twice_calls").count() == 2)
+    assert(FileLedger.load(spark, s"$root/_ledger").count() == 2) // one land, one load
+  }
+}
+
+object PipelineE2ESpec {
+  /** Met by the two star models' rows; static, so the UDF closure
+    * reaches the one instance instead of a serialized copy. */
+  val pair = new CyclicBarrier(2)
 }

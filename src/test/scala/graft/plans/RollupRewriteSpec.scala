@@ -3,12 +3,11 @@ package graft.plans
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 
 /** The rewrite must be (a) taken when covered — plan reads the cube, not
   * the fact; (b) refused when not covered — plan reads the fact; (c)
   * invisible to results either way. */
-class RollupRewriteSpec extends SparkSpec with BeforeAndAfterAll {
+class RollupRewriteSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val basePath = s"$sf/documents.parquet"
@@ -21,7 +20,7 @@ class RollupRewriteSpec extends SparkSpec with BeforeAndAfterAll {
       dims = Seq("source", "lang"), measures = Seq("n_chars"), cubePath)
   }
 
-  override def afterAll(): Unit = {
+  override protected def afterAll(): Unit = {
     RollupRewrite.clear() // shared session: don't leak into other suites
     super.afterAll()
   }
