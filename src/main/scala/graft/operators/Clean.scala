@@ -65,7 +65,10 @@ object Clean {
   }
 
   /** P5: empty-result guard (reference: transform.py:111-112). Uses
-    * `head(1)` — a driver-side existence probe, not a full count. */
+    * `head(1)` — a driver-side existence probe, not a full count, but
+    * still a Spark job. `Pipeline.cleaned` calls it only when no raw
+    * footer already shows a non-null value, which proves a row
+    * survives `clean`. */
   def requireNonEmpty(df: DataFrame, context: String = "clean"): DataFrame = {
     require(df.head(1).nonEmpty, s"[$context] DataFrame is empty after cleaning")
     df

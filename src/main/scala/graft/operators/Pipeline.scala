@@ -24,8 +24,9 @@ import graft.sources.Readers
   *  - every skip is decided on the calling thread before any unit runs;
   *    units that share a name (and so a raw/staging path) run in list
   *    order inside one task;
-  *  - ledger appends never overlap ([[FileLedger.append]] serializes
-  *    them), and each mark is written right after its own batch commits;
+  *  - each ledger mark is written right after its own batch commits;
+  *    marks may be written concurrently ([[FileLedger.append]] gives
+  *    each its own file, written by the driver without a Spark job);
   *  - the threads are created by the calling thread for each stage, at
   *    most min(units, defaultParallelism), so they start with its Spark
   *    local properties (job group, tracing tags);
@@ -140,6 +141,21 @@ object Pipeline {
   private def byName[A](units: Seq[A])(name: A => String): Seq[Seq[A]] =
     units.map(name).distinct.map(n => units.filter(u => name(u) == n))
 
+  /** `src`'s batch at `rawPath`, cleaned, and known to keep a row
+    * (reference: transform.py:111-112). `Clean.clean` drops only rows
+    * whose every column is null, so a non-null value in the read keeps
+    * its row: when a raw footer shows one, no job runs. Only when no
+    * footer does (an all-null batch, a nested schema, a layout
+    * `Readers.parquet` leaves to Spark) is the cleaned batch probed with
+    * [[Clean.requireNonEmpty]], which fails before staging is touched. */
+  private[operators] def cleaned(spark: SparkSession, rawPath: String,
+                                 src: Source): DataFrame = {
+    val raw = Readers.parquet(spark, rawPath)
+    val out = Clean.clean(src.renames)(raw)
+    if (org.apache.spark.sql.graftshim.Shim.parquetHasValue(spark, rawPath, raw.schema)) out
+    else Clean.requireNonEmpty(out, src.name)
+  }
+
   private def runInner(spark: SparkSession, sources: Seq[Source], root: String,
                        buildStar: Map[String, DataFrame] => Map[String, DataFrame],
                        hook: graft.operators.RunReport, retries: Int): RunReport = {
@@ -247,10 +263,8 @@ object Pipeline {
     concurrently(spark, cleanGroups.size) { submit =>
       cleanGroups.foreach(group => submit(group.foreach { src =>
         attempt(cleanM) {
-          val raw = Readers.parquet(spark, s"$root/raw/${src.name}")
-          val cleaned = Clean.requireNonEmpty(
-            Clean.clean(src.renames)(raw), src.name)
-          TableStore.writeParquet(cleaned, s"$stagingRoot/${src.name}")
+          TableStore.writeParquet(cleaned(spark, s"$root/raw/${src.name}", src),
+            s"$stagingRoot/${src.name}")
         }
       }))
     }

@@ -82,6 +82,100 @@ class LedgerAndStoreSpec extends SparkSpec {
     assert(FileLedger.unprocessed(spark, missing, "a", Seq("f2", "f1")) == Seq("f1", "f2"))
   }
 
+  private def names(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten.sorted
+
+  private def marks(dir: String): Seq[String] =
+    names(dir).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+
+  test("FileLedger.append launches no job and writes one part file whose footer infers to Schema") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-mark").toString + "/_ledger"
+    val before = System.currentTimeMillis()
+    val (_, jobs) = countJobs(FileLedger.append(spark, dir, Seq(("a", "f1"), ("a", "f2"))))
+    assert(jobs == 0, s"a ledger mark ran $jobs Spark jobs")
+    val Seq(part) = marks(dir)
+    assert(part.matches("part-[0-9a-f-]{36}\\.parquet"), part)
+    assert(!names(dir).contains("_temporary") && !names(dir).contains("_SUCCESS"), names(dir))
+    val mark = spark.read.parquet(s"$dir/$part")
+    assert(mark.schema == org.apache.spark.sql.types.StructType.fromDDL(FileLedger.Schema))
+    val stamps = mark.select("loaded_at").as[java.sql.Timestamp].collect().map(_.getTime)
+    assert(stamps.length == 2 && stamps.forall(t => t >= before - 1000 && t <= System.currentTimeMillis()))
+  }
+
+  test("FileLedger.unprocessed on an existing ledger launches exactly one job") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-one-job").toString
+    FileLedger.append(spark, dir, Seq(("a", "f1")))
+    FileLedger.append(spark, dir, Seq(("b", "g1")))
+    val (pending, jobs) = countJobs(
+      FileLedger.unprocessed(spark, dir, Seq(("b", "g1"), ("a", "f2"), ("a", "f1"))))
+    assert(pending == Seq(("a", "f2")))
+    assert(jobs == 1, s"the ledger lookup ran $jobs Spark jobs")
+    // more marks than Spark lists on the driver before it lists in a job
+    (0 until 40).foreach(i => FileLedger.append(spark, dir, Seq(("c", s"h$i"))))
+    val (many, manyJobs) = countJobs(
+      FileLedger.unprocessed(spark, dir, Seq(("c", "h39"), ("c", "h40"), ("a", "f2"))))
+    assert(many == Seq(("a", "f2"), ("c", "h40")))
+    assert(manyJobs == 1, s"the lookup over 42 marks ran $manyJobs Spark jobs")
+  }
+
+  test("FileLedger.load reads exactly the mark files, by explicit path") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-input").toString + "/_ledger"
+    FileLedger.append(spark, dir, Seq(("a", "f1")))
+    FileLedger.append(spark, dir, Seq(("a", "f2"), ("b", "g1")))
+    val read = FileLedger.load(spark, dir).inputFiles
+      .map(f => new org.apache.hadoop.fs.Path(f).getName).toSeq.sorted
+    assert(read.size == 2 && read == marks(dir))
+  }
+
+  test("16 threads appending to one ledger leave every pair once and no temp file") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-threads").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pairs = (0 until 16).map(i => ("t", s"f$i"))
+    try {
+      val done = pairs.map(pair => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = { go.await(); FileLedger.append(spark, dir, Seq(pair)) }
+      }))
+      go.countDown()
+      done.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    val rows = FileLedger.load(spark, dir).select("folder_name", "file_name")
+      .as[(String, String)].collect().toSeq.sorted
+    assert(rows == pairs.sorted)
+    assert(marks(dir).size == 16)
+    assert(!names(dir).exists(n => n == "_temporary" || n.endsWith(".tmp") || n.endsWith(".tmp.crc")),
+      names(dir))
+  }
+
+  test("a hidden temp mark left by a crash mid-append is ignored by load and unprocessed") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-crash").toString
+    val other = java.nio.file.Files.createTempDirectory("ledger-crash-other").toString
+    FileLedger.append(spark, dir, Seq(("a", "f1")))
+    FileLedger.append(spark, other, Seq(("a", "f2")))
+    // a whole mark not yet renamed, and a torn one
+    java.nio.file.Files.copy(java.nio.file.Paths.get(other, marks(other).head),
+      java.nio.file.Paths.get(dir, s".${marks(other).head}.tmp"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, ".part-torn.parquet.tmp"),
+      "PAR1 torn".getBytes)
+    assert(FileLedger.load(spark, dir).select("file_name").as[String].collect().toSeq == Seq("f1"))
+    assert(FileLedger.unprocessed(spark, dir, "a", Seq("f1", "f2")) == Seq("f2"))
+  }
+
+  test("a ledger mixing a Spark-written part with driver-written marks reads both") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger-mixed").toString + "/_ledger"
+    Seq(("a", "f1")).toDF("folder_name", "file_name")
+      .withColumn("loaded_at", current_timestamp())
+      .write.mode("append").parquet(dir)
+    assert(names(dir).contains("_SUCCESS"))
+    FileLedger.append(spark, dir, Seq(("a", "f2")))
+    val ledger = FileLedger.load(spark, dir)
+    assert(ledger.schema("loaded_at").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(ledger.filter(col("loaded_at").isNull).count() == 0)
+    assert(ledger.select("folder_name", "file_name").as[(String, String)].collect().toSet ==
+      Set(("a", "f1"), ("a", "f2")))
+    assert(FileLedger.unprocessed(spark, dir, "a", Seq("f3", "f2", "f1")) == Seq("f3"))
+  }
+
   test("appendByName aligns case-insensitively, fills missing with null") {
     val a = Seq((1L, "x")).toDF("id", "name")
     val b = Seq(("y", 2L)).toDF("NAME", "ID") // permuted + re-cased

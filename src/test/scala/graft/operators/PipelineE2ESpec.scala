@@ -120,10 +120,11 @@ class PipelineE2ESpec extends SparkSpec {
     assert(staged.forall { case (t, rows) => contents(t) == rows })
     assert(spark.table("fact_call_logs").select("call_id").as[String]
       .collect().toSet == Set("k1", "k2"))
-    // one ledger lookup, no dead transforms, reads of loaded folders
-    // only, no schema-inference job per read; the units' pool threads
+    // one single-job ledger lookup, no dead transforms, reads of loaded
+    // folders only, no schema-inference job per read, no non-empty probe
+    // for a batch whose footer shows a value; the units' pool threads
     // carry the caller's job group, so none of their jobs goes uncounted
-    assert(jobs2 == 19, s"re-run launched $jobs2 Spark jobs, pinned at 19")
+    assert(jobs2 == 16, s"re-run launched $jobs2 Spark jobs, pinned at 16")
   }
 
   test("a batch landed but never loaded (crash between land and load) is transformed and loaded on the next run") {
@@ -173,6 +174,44 @@ class PipelineE2ESpec extends SparkSpec {
     }
     assert(e.getMessage.contains("[nully] DataFrame is empty after cleaning"))
     assert(staged == before)
+  }
+
+  test("cleaning a batch whose raw footer shows a value launches no probe job") {
+    val root = Files.createTempDirectory("pipe-footer").toString
+    val schema = StructType(Seq(
+      StructField("id", StringType), StructField("v", StringType)))
+    Readers.rows(spark, Seq(Row(null, " x "), Row(null, null), Row(null, " x ")), schema)
+      .write.parquet(s"$root/raw/footer_src")
+    val src = Pipeline.Source("footer_src", _ => throw new IllegalStateException("not landed"))
+    val (cleaned, jobs) = countJobs(Pipeline.cleaned(spark, s"$root/raw/footer_src", src))
+    assert(jobs == 0, s"cleaning a non-empty batch ran $jobs Spark jobs")
+    assert(cleaned.collect().map(_.toString).toSeq == Seq("[null,x]"))
+  }
+
+  test("a drifted raw folder whose only values sit outside the read schema fails as empty") {
+    val root = Files.createTempDirectory("pipe-drift").toString
+    val raw = s"$root/raw/drifted"
+    // the first file by path decides the read schema (id, v) and is all
+    // null; the second holds values only in a column that schema lacks
+    def single(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val out = Files.createTempDirectory("pipe-drift-part").toString + "/o"
+      df.coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).list().filter(_.endsWith(".parquet")).head
+      Files.createDirectories(java.nio.file.Paths.get(raw))
+      Files.move(java.nio.file.Paths.get(out, part), java.nio.file.Paths.get(raw, name))
+    }
+    single(Readers.rows(spark, Seq(Row(null, null)), StructType(Seq(
+      StructField("id", StringType), StructField("v", StringType)))), "a.parquet")
+    single(Seq("e1", "e2").toDF("extra"), "b.parquet")
+    FileLedger.append(spark, s"$root/_ledger", Seq(("drifted", "drifted.batch")))
+    val src = Pipeline.Source("drifted",
+      _ => throw new IllegalStateException("a ledger-marked batch must not land again"),
+      incremental = true)
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, Seq(src), root, _ => Map.empty, retries = 0)
+    }
+    assert(e.getMessage.contains("[drifted] DataFrame is empty after cleaning"))
+    assert(!new java.io.File(s"$root/staging/drifted").exists())
   }
 
   test("transient source failure is retried and recorded (reference retries: 2)") {
