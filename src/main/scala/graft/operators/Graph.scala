@@ -490,42 +490,38 @@ object Graph {
     * detection). Labels start as the node id; each round every node
     * adopts the most frequent label among its NEIGHBORS, ties broken
     * by the smallest label (the deterministic variant — classic async
-    * LPA is run-order-dependent and un-oracle-able). A node with no
-    * edges keeps its own label. Distinct from connected components
-    * (Dedup.groups): frequency voting can split a connected graph
-    * into several communities, which is the point.
+    * LPA is run-order-dependent and un-oracle-able). Distinct from
+    * connected components (Dedup.groups): frequency voting can split a
+    * connected graph into several communities, which is the point.
     *
     * `edges` must be SYMMETRIC (caller unions both directions) and
     * distinct. Returns (node, label) after `rounds` synchronous
-    * rounds.
+    * rounds. The symmetric contract puts every node in the source
+    * column, so the node set is that column's distinct values, and
+    * every node receives at least one vote every round (no nodes
+    * left-join).
     *
-    * Scale shape per round: one equi-join of the label relation to the
-    * edge list, one (node, label) count aggregate, then ONE max-struct
-    * aggregate picking the winner — two key shuffles, no sort, no
-    * window (a row_number top-1 window was measured slower: it re-sorts
-    * every partition and its partitionBy(node) cannot reuse the
-    * (node, label) aggregate's partitioning), and NO nodes left-join:
-    * edges are symmetric by contract, so every node receives at least
-    * one vote every round. Each round's labels go through
-    * [[Fixpoint.cut]], as in pageRank, so the plan stays the same size
-    * every round. `rounds = 0` returns the initial labels (label =
-    * node). */
+    * Scale shape: the edge list is hash-partitioned on its source once
+    * and cached, so the initial node set and every round's join of the
+    * label relation (keyed by node, from the previous round's
+    * aggregate) read it without an exchange. A round is then ONE key
+    * shuffle: `mode(label, deterministic = true)` per node, which picks
+    * the most frequent label and breaks ties toward the smallest, in
+    * one aggregate instead of a (node, label) count plus a max-struct
+    * winner. Each round's labels go through [[Fixpoint.cut]], as in
+    * pageRank, so the plan stays the same size every round.
+    * `rounds = 0` returns the initial labels (label = node). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 3): DataFrame = {
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .persist(lvl)
-    var labels = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst"))).distinct()
+      .repartition(col("__src")).persist(lvl)
+    var labels = e.select(col("__src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to rounds) {
-      // max of (count, -label) == most-frequent label, ties to SMALLEST
       labels = Fixpoint.cut(labels
         .join(e, labels("node") === e("__src"))
-        .groupBy(col("__dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy("node")
-        .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__w"))
-        .select(col("node"), (-col("__w.__nl")).as("label")))
+        .groupBy(col("__dst").as("node"))
+        .agg(mode(col("label"), deterministic = true).as("label")))
     }
     e.unpersist()
     labels

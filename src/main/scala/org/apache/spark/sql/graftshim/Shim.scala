@@ -60,6 +60,11 @@ object Shim {
     }
   }
 
+  /** The running SparkContext, if any, without creating one
+    * (`SparkContext.getActive` is `private[spark]`). */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
+
   /** Unset a previously configured checkpoint dir (`sc.checkpointDir`
     * is `private[spark]` with a set-only public face) — lets a test
     * exercise the reliable-checkpoint branch of Fixpoint.cut and then
